@@ -1013,17 +1013,14 @@ def _bench_wikidump(spark) -> dict:
     split = max(2 * 1024 * 1024, size // cpus)
 
     def run() -> float:
-        # compute_diffs: pairing AND the token diff run inside the
-        # source partition (the reference's in-mapper shape) — zero
-        # shuffle of text bodies and no second Arrow round-trip
-        # (equivalence vs the declarative UDF plan is asserted in
-        # tests/test_diffdb.py)
-        revs = read_wikidump(
-            spark, path, splitSize=str(split), compute_diffs="true"
-        )
+        # pairing AND the token diff run inside the source partition
+        # (the reference's in-mapper shape) — zero shuffle of text
+        # bodies and no second Arrow round-trip (equivalence vs the
+        # declarative UDF plan is asserted in tests/test_diffdb.py)
+        revs = read_wikidump(spark, path, splitSize=str(split))
         t0 = time.perf_counter()
         (
-            build_diffdb(revs, paired=True)
+            build_diffdb(revs)
             .select(F.sum(F.size("ops")).alias("ops"), F.count(F.lit(1)).alias("rows"))
             .collect()
         )
@@ -1177,12 +1174,10 @@ def _bench_wikidump_markup(spark, cpus: int) -> dict:
     split = max(2 * 1024 * 1024, size // cpus)
 
     def run() -> float:
-        revs = read_wikidump(
-            spark, path, splitSize=str(split), compute_diffs="true"
-        )
+        revs = read_wikidump(spark, path, splitSize=str(split))
         t0 = time.perf_counter()
         (
-            build_diffdb(revs, paired=True)
+            build_diffdb(revs)
             .select(F.sum(F.size("ops")).alias("ops"), F.count(F.lit(1)).alias("rows"))
             .collect()
         )
@@ -1245,12 +1240,10 @@ def _bench_wikidump_bz2(spark, xml_path: str, size_gb: float, cpus: int) -> dict
     split = max(256 * 1024, comp_size // cpus)
 
     def run() -> float:
-        revs = read_wikidump(
-            spark, bz2_path, splitsize=str(split), compute_diffs="true"
-        )
+        revs = read_wikidump(spark, bz2_path, splitsize=str(split))
         t0 = time.perf_counter()
         (
-            build_diffdb(revs, paired=True)
+            build_diffdb(revs)
             .select(F.sum(F.size("ops")).alias("ops"), F.count(F.lit(1)).alias("rows"))
             .collect()
         )

@@ -186,6 +186,31 @@ def test_curate_output_shards_parquet(tmp_path):
     assert n > 0
 
 
+def test_revisions_subcommand_writes_base_schema(tmp_path):
+    """The revisions table keeps the base revision schema (FIXTURES.md
+    §1): none of the scan's pairing or diff columns are written."""
+    import pyarrow.parquet as pq
+
+    from wikihadoop_spark.sources.wikidump import BASE_SCHEMA_DDL
+
+    from dump_fixtures import EXPECTED_REV_IDS, standard_dump, write_dump
+
+    path = write_dump(tmp_path, standard_dump())
+    out = str(tmp_path / "revisions")
+    r = subprocess.run(
+        [sys.executable, "-m", "wikihadoop_spark", "revisions",
+         "--input", path, "--output", out, "--cores", "2"],
+        capture_output=True,
+        text=True,
+        timeout=600,
+        cwd=REPO,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    table = pq.read_table(out)
+    assert table.schema.names == [c.split()[0] for c in BASE_SCHEMA_DDL.split(", ")]
+    assert sorted(table.column("rev_id").to_pylist()) == EXPECTED_REV_IDS
+
+
 def test_readme_documents_every_cli_flag():
     """Doc-coverage guard for the CLI surface, mirroring the
     query/COVERAGE.md guard: every flag registered in __main__.py must

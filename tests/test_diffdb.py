@@ -8,9 +8,22 @@ import gzip
 
 from wikihadoop_spark.functions.diffs import apply_diff
 from wikihadoop_spark.plans.diffdb import build_diffdb, write_diffdb_tsv
-from wikihadoop_spark.sources.wikidump import read_wikidump
+from wikihadoop_spark.sources.wikidump import BASE_SCHEMA_DDL, read_wikidump
 
-from dump_fixtures import standard_dump, write_dump
+from dump_fixtures import big_dump, standard_dump, write_dump
+
+BASE_COLUMNS = [c.split()[0] for c in BASE_SCHEMA_DDL.split(", ")]
+
+
+def _rows_key(df):
+    return sorted(
+        (
+            r.rev_id, r.page_id, r.namespace, r.title, r.timestamp,
+            r.beginningofpage,
+            [(o.position, o.action, o.content) for o in r.ops],
+        )
+        for r in df.collect()
+    )
 
 
 def _diffdb(spark, tmp_path, **kwargs):
@@ -62,22 +75,13 @@ def test_diffdb_exclude_filter(spark, tmp_path):
 
 
 def test_diffdb_source_side_pairing_equivalent(spark, tmp_path):
-    """Window pairing and source-streaming pairing produce identical
-    diffdb rows (SURVEY §7.4.1's two pairing strategies)."""
+    """The default plan (pairing and diff inside the scan) produces the
+    rows of the declarative plan: window-lag pairing plus the Arrow
+    diff UDF over the base revision columns."""
     path = write_dump(tmp_path, standard_dump())
-    via_window = build_diffdb(read_wikidump(spark, path))
-    via_source = build_diffdb(
-        read_wikidump(spark, path, pair_revisions="true"), paired=True
-    )
-    a = sorted(
-        (r.rev_id, r.beginningofpage, [(o.position, o.action, o.content) for o in r.ops])
-        for r in via_window.collect()
-    )
-    b = sorted(
-        (r.rev_id, r.beginningofpage, [(o.position, o.action, o.content) for o in r.ops])
-        for r in via_source.collect()
-    )
-    assert a == b
+    revs = read_wikidump(spark, path)
+    via_window = build_diffdb(revs.select(*BASE_COLUMNS))
+    assert _rows_key(build_diffdb(revs)) == _rows_key(via_window)
 
 
 def test_tsv_sink_py2_repr(spark, tmp_path):
@@ -210,25 +214,20 @@ def test_golden_bytes_vs_published_rows(spark, tmp_path):
 
 
 def test_in_source_diff_equivalent(spark, tmp_path):
-    """compute_diffs=true (the reference's in-mapper shape: ops computed
-    inside the source partition, texts never cross the Arrow boundary)
-    produces exactly the rows of the declarative UDF plan."""
-    path = write_dump(tmp_path, standard_dump())
+    """The same equivalence over a bz2 dump of several blocks read in
+    several splits: each page is paired and diffed inside the partition
+    that owns it, across block and split boundaries."""
+    import bz2
 
-    def key(df):
-        return sorted(
-            (r.rev_id, r.timestamp, r.beginningofpage,
-             [(o.position, o.action, o.content) for o in r.ops])
-            for r in df.collect()
-        )
-
-    via_udf = build_diffdb(
-        read_wikidump(spark, path, pair_revisions="true"), paired=True
-    )
-    via_source = build_diffdb(
-        read_wikidump(spark, path, compute_diffs="true"), paired=True
-    )
-    assert key(via_udf) == key(via_source)
+    path = tmp_path / "multi.xml.bz2"
+    path.write_bytes(bz2.compress(big_dump(200, 6).encode(), 1))
+    split = path.stat().st_size // 4
+    revs = read_wikidump(spark, str(path), splitsize=str(split))
+    assert revs.rdd.getNumPartitions() >= 4
+    via_window = build_diffdb(revs.select(*BASE_COLUMNS))
+    got = _rows_key(build_diffdb(revs))
+    assert len(got) == 200 * 6
+    assert got == _rows_key(via_window)
 
 
 def test_epoch_timezone_invariant(spark, tmp_path):
@@ -240,7 +239,7 @@ def test_epoch_timezone_invariant(spark, tmp_path):
     path = write_dump(tmp_path, standard_dump())
 
     def epochs():
-        df = build_diffdb(read_wikidump(spark, path), paired=False)
+        df = build_diffdb(read_wikidump(spark, path))
         return sorted((r.rev_id, r.timestamp) for r in df.collect())
 
     tz = spark.conf.get("spark.sql.session.timeZone")

@@ -238,6 +238,41 @@ def test_native_disabled_falls_back(monkeypatch):
     monkeypatch.setattr(native, "_loaded", False)
 
 
+def test_native_kernel_loads_from_shipped_zip(tmp_path):
+    """Spark workers import the package from the zip the session ships
+    to them; the C kernel must load from that zip too, with the working
+    directory outside the source tree and a cold kernel cache."""
+    import os
+    import subprocess
+    import sys
+
+    from wikihadoop_spark.session import _package_zip
+
+    zpath = _package_zip()
+    code = (
+        "import sys; sys.path.insert(0, sys.argv[1])\n"
+        "from wikihadoop_spark.functions import native\n"
+        "assert native.__file__.startswith(sys.argv[1]), native.__file__\n"
+        "print(native.load() is not None)\n"
+    )
+    env = {
+        k: v
+        for k, v in os.environ.items()
+        if k not in ("PYTHONPATH", "WIKIHADOOP_NO_NATIVE")
+    }
+    env["XDG_CACHE_HOME"] = str(tmp_path / "cache")
+    r = subprocess.run(
+        [sys.executable, "-c", code, zpath],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert r.stdout.strip() == "True"
+
+
 def test_ops_check_udf_multi_op_rows(spark):
     """Regression: under Arrow the ops cell is a numpy array, whose
     truth value raises for length >= 2 — the old `o or []` therefore

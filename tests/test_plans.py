@@ -154,27 +154,29 @@ def test_media_metadata_prunes_documents_scan(spark):
 
 
 def test_in_source_diff_no_second_python_stage(spark, tmp_path):
-    """compute_diffs=true moves the diff into the scan: the plan must
-    contain NO Python eval stage (vs the declarative plan, which has
-    the Arrow UDF stage)."""
-    from wikihadoop_spark.plans.diffdb import build_diffdb
+    """The default read_wikidump -> build_diffdb plan pairs and diffs
+    inside the scan: ops come off the scan, so there is no Window (the
+    pairing shuffle) and no BroadcastExchange (the namespace join), and
+    the only Python eval is the TSV formatter at the sink."""
+    from wikihadoop_spark.plans.diffdb import build_diffdb, diffdb_tsv_lines
     from wikihadoop_spark.sources.wikidump import read_wikidump
 
     from dump_fixtures import standard_dump, write_dump
 
     path = write_dump(tmp_path, standard_dump())
-
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    in_source = build_diffdb(
-        read_wikidump(spark, path, compute_diffs="true"), paired=True
+    diffdb = build_diffdb(read_wikidump(spark, path))
+    sink = diffdb_tsv_lines(
+        diffdb.dropDuplicates(["rev_id"]).orderBy("page_id", "rev_id")
     )
-    assert "EvalPython" not in plan(in_source)
-    declarative = build_diffdb(
-        read_wikidump(spark, path, pair_revisions="true"), paired=True
-    )
-    assert "EvalPython" in plan(declarative)
+    plan = sink._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
+    assert "BroadcastExchange" not in plan
+    lines = plan.splitlines()
+    # ops come off the scan (a leaf), so no Exchange sits below them
+    (scan,) = [l for l in lines if "BatchScan wikidump" in l]
+    assert "ops#" in scan
+    evals = [l for l in lines if "EvalPython" in l]
+    assert len(evals) == 1 and "fmt(" in evals[0], evals
 
 
 def test_bucketed_join_is_exchange_free(spark, tmp_path):

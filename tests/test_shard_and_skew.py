@@ -54,7 +54,7 @@ def test_giant_page_in_scan_diff_skew_drill(spark, tmp_path):
     """Giant-page skew drill: one page's revision chain spans ~30 split
     ranges, so dozens of partitions see its bytes but ONLY the partition
     owning its <page> tag may emit rows (tailing far past its range),
-    and compute_diffs=true serializes the whole chain through that one
+    and the in-scan diff serializes the whole chain through that one
     task's Python loop. Owner-rule exactly-once, pairing, and patch
     reconstruction must all survive; the crossover to dense-seq join
     pairing when such a chain dominates a stage is documented in
@@ -93,7 +93,7 @@ def test_giant_page_in_scan_diff_skew_drill(spark, tmp_path):
     path = write_dump(tmp_path, xml, "giant.xml")
     split = max(64 * 1024, len(xml) // 30)
 
-    df = read_wikidump(spark, path, splitSize=str(split), compute_diffs="true")
+    df = read_wikidump(spark, path, splitSize=str(split))
     assert df.rdd.getNumPartitions() >= 20  # the page truly spans splits
     rows = df.collect()
 

@@ -159,14 +159,10 @@ def test_bz2(spark, tmp_path):
 
 
 def test_source_side_pairing(spark, tmp_path):
-    """pair_revisions option: streaming in-source pairing (the
-    reference record reader's prevRevision buffer,
-    StreamWikiDumpInputFormat.java:298-429)."""
+    """Streaming in-scan pairing (the reference record reader's
+    prevRevision buffer, StreamWikiDumpInputFormat.java:298-429)."""
     path = write_dump(tmp_path, standard_dump())
-    rows = {
-        r.rev_id: r
-        for r in _read(spark, path, pair_revisions="true").collect()
-    }
+    rows = {r.rev_id: r for r in _read(spark, path).collect()}
     assert rows[101].beginningofpage is True and rows[101].prev_text == ""
     assert rows[102].beginningofpage is False
     assert rows[102].prev_text == rows[101].text

@@ -115,8 +115,8 @@ def test_stream_restart_resumes_from_checkpoint(spark, tmp_path):
 @pytest.mark.slow
 def test_streaming_diffdb_matches_batch(spark, tmp_path):
     """Incremental diffdb: the SAME build_diffdb plan runs on the
-    streaming source (compute_diffs in-scan -> stream-static broadcast
-    ns join -> projection), producing exactly the batch pipeline's rows
+    streaming source (pairing and diff in-scan -> namespace map ->
+    projection), producing exactly the batch pipeline's rows
     as shards arrive — the reference's 22-hour full re-run becomes an
     append-only stream."""
     from wikihadoop_spark.plans.diffdb import build_diffdb
@@ -127,13 +127,13 @@ def test_streaming_diffdb_matches_batch(spark, tmp_path):
     (indir / "s1.xml").write_text(standard_dump())
     (indir / "s2.xml").write_text(big_dump(5, 3))
 
+    register_wikidump(spark)
     revs_stream = (
         spark.readStream.format("wikidump")
         .option("path", str(indir))
-        .option("compute_diffs", "true")
         .load()
     )
-    stream_df = build_diffdb(revs_stream, paired=True).drop("beginningofpage")
+    stream_df = build_diffdb(revs_stream).drop("beginningofpage")
     q = (
         stream_df.writeStream.format("memory")
         .queryName("diffdb_stream")
@@ -145,10 +145,11 @@ def test_streaming_diffdb_matches_batch(spark, tmp_path):
     finally:
         q.stop()
 
-    batch = build_diffdb(
-        read_wikidump(spark, str(indir / "*.xml"), compute_diffs="true"),
-        paired=True,
-    ).drop("beginningofpage").collect()
+    batch = (
+        build_diffdb(read_wikidump(spark, str(indir / "*.xml")))
+        .drop("beginningofpage")
+        .collect()
+    )
 
     def key(rows):
         return sorted(

@@ -3,7 +3,7 @@ invocation (README.rst:217-219 / fileformat.rst:37):
 
   python -m wikihadoop_spark diffdb --input dump.xml[.bz2] --output out/ \
       [--exclude-pages-with REGEX] [--split-size BYTES] [--cores N] \
-      [--source-pairing] [--no-sort] [--no-dedup] [--compression gzip]
+      [--no-sort] [--no-dedup] [--compression gzip]
 
   python -m wikihadoop_spark revisions --input dump.xml --output out/  # parquet revisions table
 
@@ -39,11 +39,6 @@ def main(argv: list[str] | None = None) -> int:
     common.add_argument("--cores", type=int, default=None)
 
     d = sub.add_parser("diffdb", parents=[common], help="full diff pipeline -> TSV")
-    d.add_argument("--source-pairing", action="store_true",
-                   help="pair revisions inside the source (no text shuffle)")
-    d.add_argument("--source-diff", action="store_true",
-                   help="compute diffs inside the source partition too "
-                        "(the reference's in-mapper shape; fastest)")
     d.add_argument("--no-sort", action="store_true")
     d.add_argument("--no-dedup", action="store_true")
     d.add_argument("--compression", default="gzip")
@@ -503,16 +498,18 @@ def main(argv: list[str] | None = None) -> int:
     from .observability import observed_counts
     from .plans.diffdb import build_diffdb, write_diffdb_tsv
     from .session import get_spark
-    from .sources.wikidump import read_wikidump
+    from .sources.wikidump import BASE_SCHEMA_DDL, SCHEMA_DDL, read_wikidump
 
     spark = get_spark("wikihadoop-cli", cpus=args.cores)
     try:
-        opts = {"splitSize": str(args.split_size)}
-        if args.cmd == "diffdb" and getattr(args, "source_diff", False):
-            opts["compute_diffs"] = "true"
-        elif args.cmd == "diffdb" and args.source_pairing:
-            opts["pair_revisions"] = "true"
-        revs = read_wikidump(spark, args.input, **opts)
+        # the revisions table is the base schema (FIXTURES.md §1): the
+        # scan neither pairs texts nor diffs for it
+        revs = read_wikidump(
+            spark,
+            args.input,
+            schema=BASE_SCHEMA_DDL if args.cmd == "revisions" else SCHEMA_DDL,
+            splitSize=str(args.split_size),
+        )
 
         if args.cmd == "revisions":
             if args.exclude_pages_with:
@@ -524,11 +521,7 @@ def main(argv: list[str] | None = None) -> int:
             print(f"revisions written: {obs.get['written_revisions']} -> {args.output}")
             return 0
 
-        diff = build_diffdb(
-            revs,
-            exclude_pages_with=args.exclude_pages_with,
-            paired=args.source_pairing or getattr(args, "source_diff", False),
-        )
+        diff = build_diffdb(revs, exclude_pages_with=args.exclude_pages_with)
         write_diffdb_tsv(
             diff,
             args.output,

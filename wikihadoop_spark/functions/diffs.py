@@ -528,8 +528,8 @@ def ops_check_udf():
     """Arrow-vectorized pandas UDF: (prev_text, text, ops) ->
     struct<roundtrip_ok:boolean, empty_iff_equal:boolean>.
 
-    Like diff_check_udf but verifies PROVIDED ops (e.g. computed
-    in-source via compute_diffs=true) instead of re-diffing — the gate
+    Like diff_check_udf but verifies PROVIDED ops (e.g. the wikidump
+    scan's own) instead of re-diffing — the gate
     for the in-scan diff path: patch(prev, ops) must reconstruct text
     exactly, and ops must be empty iff the texts are equal."""
     import pandas as pd

@@ -16,11 +16,10 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import pkgutil
 import subprocess
 import sys
 import tempfile
-
-_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_native.c")
 
 _lib = None
 _loaded = False
@@ -45,9 +44,10 @@ def _owned_by_me(path: str) -> bool:
         return False
 
 
-def _build(src_path: str) -> str | None:
-    with open(src_path, "rb") as fh:
-        src = fh.read()
+def _build() -> str | None:
+    # through the package loader, not a file path: Spark workers import
+    # this package from a zip (session._package_zip)
+    src = pkgutil.get_data(__package__, "_native.c")
     tag = hashlib.sha256(src).hexdigest()[:16]
     cache = _cache_dir()
     if not _owned_by_me(cache):
@@ -62,7 +62,10 @@ def _build(src_path: str) -> str | None:
         return so_path if _owned_by_me(so_path) else None
     cc = os.environ.get("CC", "cc")
     tmp = f"{so_path}.tmp.{os.getpid()}"
+    src_path = f"{tmp}.c"
     try:
+        with open(src_path, "wb") as fh:
+            fh.write(src)
         subprocess.run(
             [cc, "-O2", "-shared", "-fPIC", "-o", tmp, src_path],
             check=True,
@@ -72,11 +75,13 @@ def _build(src_path: str) -> str | None:
         os.replace(tmp, so_path)  # atomic: concurrent workers race safely
         return so_path
     except Exception:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
         return None
+    finally:
+        for leftover in (tmp, src_path):
+            try:
+                os.unlink(leftover)
+            except OSError:
+                pass
 
 
 def load():
@@ -92,7 +97,7 @@ def load():
 
         if array("i").itemsize != 4:  # pragma: no cover — ILP64 exotica
             return None
-        so_path = _build(_SRC)
+        so_path = _build()
         if so_path is None:
             return None
         lib = ctypes.CDLL(so_path)

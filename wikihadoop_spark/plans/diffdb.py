@@ -1,36 +1,36 @@
 """The diffdb pipeline — the reference's one end-to-end dataflow,
 declared as a DataFrame plan (SURVEY §7.1):
 
-scan (wikidump source) -> lag-pairing (P1) -> regex page filter (F1)
--> metadata projection (F2/X3/X4) -> token diff (D1, pandas UDF)
+scan (wikidump source: decode, parse, pair P1, token diff D1)
+-> regex page filter (F1) -> metadata projection (F2/X3/X4)
 -> sort + dedup (O2/O3) -> TSV sink (S7/X5/X6).
 
 Output schema is FIXTURES.md §3 / fileformat.rst:13-27: one row per
 revision with 9 metadata fields + the diff-op array.  ``timestamp`` is
 Unix epoch seconds (fileformat.rst:17); ``namespace``/``title`` come
-from namespace-prefix normalization against a broadcast namespace dim
+from namespace-prefix normalization against a literal namespace map
 (reference X3's in-mapper lookup table, revision_differ.py:94-117).
 
 Scale notes:
-- Pairing is a window over (page_id, rev_seq): one shuffle.  For
-  pathologically large single pages the source's ``pair_revisions``
-  option computes pairs streamingly instead (zero shuffle), mirroring
-  the reference's record-reader buffer.
-- The diff UDF is the only Python in the plan, fed via Arrow batches.
+- Pairing and diffing happen inside the scan, as in the reference's
+  record reader and mapper: the owner rule keeps each page in one
+  partition, so no text is shuffled and the diff runs on every scan
+  task.  A frame without ``ops`` (e.g. a projection of the base
+  revision columns) is paired by a window ``lag`` and diffed by an
+  Arrow UDF instead — the declarative reference the tests compare
+  against.
+- The only Python after the scan is the TSV formatter at the sink.
 - Counters (reference A1) ride on ``observe`` — no extra job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.diffs import diff_ops_udf
 from ..operators.pairing import pair_with_previous
 
-# MediaWiki namespace table (public standard namespace ids; the
-# reference embeds the same map in its mapper metaXML,
-# revision_differ.py:94-117).
 def epoch_seconds_ntz(col) -> "F.Column":
     """Unix epoch seconds from a ``timestamp_ntz`` holding UTC
     wall-clock (dump ``<timestamp>`` fields are always UTC).  Computed
@@ -46,6 +46,9 @@ def epoch_seconds_ntz(col) -> "F.Column":
     )
 
 
+# MediaWiki namespace table (public standard namespace ids; the
+# reference embeds the same map in its mapper metaXML,
+# revision_differ.py:94-117).
 NAMESPACES: dict[int, str] = {
     -2: "Media", -1: "Special", 0: "", 1: "Talk", 2: "User",
     3: "User talk", 4: "Wikipedia", 5: "Wikipedia talk", 6: "File",
@@ -60,68 +63,48 @@ def build_diffdb(
     revisions: DataFrame,
     *,
     exclude_pages_with: str | None = None,
-    paired: bool = False,
 ) -> DataFrame:
     """revisions (wikidump source schema) -> diffdb rows.
 
-    ``paired=True`` means the source already attached
-    prev_text/beginningofpage (streaming pairing); otherwise the
-    window-lag operator adds them here.
+    The source's ``ops`` are used when the frame has them; otherwise
+    the frame is paired here (unless it already has
+    ``beginningofpage``) and diffed by the Arrow UDF.
     """
-    spark = revisions.sparkSession
-
     if exclude_pages_with:
-        # F1: drop whole pages whose title matches (Catalyst pushes the
-        # filter to the scan; the source can also pre-filter headers)
+        # F1: drop whole pages whose title matches
         revisions = revisions.filter(~F.col("title").rlike(exclude_pages_with))
 
-    if not paired:
-        revisions = pair_with_previous(
-            revisions,
-            partition_by=["page_id"],
-            order_by=["rev_seq"],
-            cols=["text", "rev_id"],
-            fill={"text": ""},
-            first_flag="beginningofpage",
-        )
+    ops = F.col("ops")
+    if "ops" not in revisions.columns:
+        if "beginningofpage" not in revisions.columns:
+            revisions = pair_with_previous(
+                revisions,
+                partition_by=["page_id"],
+                order_by=["rev_seq"],
+                cols=["text", "rev_id"],
+                fill={"text": ""},
+                first_flag="beginningofpage",
+            )
+        ops = diff_ops_udf()(F.col("prev_text"), F.col("text"))
 
-    # X3: namespace normalization via broadcast dim join on the title
-    # prefix (ns id in the dump is authoritative; the join recovers the
-    # bare title the way the reference's normalizeTitle does)
-    ns_dim = spark.createDataFrame(
-        [(k, v) for k, v in NAMESPACES.items()], "ns_id int, ns_name string"
+    # X3: namespace normalization via a literal id -> name map (ns id
+    # in the dump is authoritative; the prefix match recovers the bare
+    # title the way the reference's normalizeTitle does)
+    ns_name = F.try_element_at(
+        F.create_map(*[F.lit(x) for kv in NAMESPACES.items() for x in kv]),
+        F.col("ns"),
     )
-    prefix = F.substring_index(F.col("title"), ":", 1)
-    with_ns = (
-        revisions.join(
-            F.broadcast(ns_dim),
-            (F.col("ns") == F.col("ns_id")),
-            "left",
-        )
-        .withColumn(
-            "norm_title",
-            F.when(
-                (F.col("ns") != 0)
-                & F.col("ns_name").isNotNull()
-                & (prefix == F.col("ns_name")),
-                F.expr("substring(title, length(ns_name) + 2)"),
-            ).otherwise(F.col("title")),
-        )
-    )
+    title = F.col("title")
+    norm_title = F.when(
+        (F.col("ns") != 0) & (F.substring_index(title, ":", 1) == ns_name),
+        title.substr(F.length(ns_name) + 2, F.lit(2**31 - 1)),
+    ).otherwise(title)
 
-    if "ops" in revisions.columns:
-        # source computed the diffs in-partition (compute_diffs=true —
-        # the reference's in-mapper shape): the texts never cross the
-        # Arrow boundary, the ops column comes straight off the scan
-        diff_col = F.col("ops")
-    else:
-        diff = diff_ops_udf()
-        diff_col = diff(F.col("prev_text"), F.col("text"))
-    out = with_ns.select(
+    out = revisions.select(
         F.col("rev_id"),
         F.col("page_id"),
         F.col("ns").alias("namespace"),
-        F.col("norm_title").alias("title"),
+        norm_title.alias("title"),
         # X4: ISO-8601 -> Unix epoch seconds (fileformat.rst:17),
         # timezone-invariant (see epoch_seconds_ntz)
         epoch_seconds_ntz(F.col("ts")).alias("timestamp"),
@@ -130,7 +113,7 @@ def build_diffdb(
         F.col("user_id"),
         F.col("user_text"),
         F.col("beginningofpage"),
-        diff_col.alias("ops"),
+        ops.alias("ops"),
     )
 
     # A1 counters as observed metrics (no extra pass)
@@ -234,12 +217,10 @@ def build_diffdb_grouped(revisions: DataFrame) -> DataFrame:
     sees one page's revisions in order and emits diffdb rows,
     revision_differ.py:131-165).
 
-    Three pairing strategies now exist (window lag, source-side
-    streaming, grouped-pandas); tests assert they agree.  This one
-    shuffles each page's rows to one task like the window does, but
-    runs the whole pair+diff loop in Python — simplest to extend when
-    the per-page logic outgrows SQL (the reference's extension story),
-    at the cost of moving pairing out of the JVM.
+    Tests assert it agrees with the in-scan pairing.  It shuffles each
+    page's rows to one task, then runs the whole pair+diff loop in
+    Python — simplest to extend when the per-page logic outgrows SQL
+    (the reference's extension story), at the cost of a text shuffle.
     """
     import pandas as pd
 

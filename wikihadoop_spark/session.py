@@ -22,19 +22,10 @@ def default_cpus() -> int:
     return os.cpu_count() or 4
 
 
-def _ship_package(spark: SparkSession) -> None:
-    """Make ``wikihadoop_spark`` importable in executor Python workers.
-
-    Cloudpickle serializes the DataSource class and the UDF closures'
-    module-level references BY NAME, so workers must import this
-    package — but the driver's session may have been created without
-    the repo on PYTHONPATH (driver-side imports then work via sys.path
-    manipulation while workers fail with ModuleNotFoundError).  Zip the
-    package once and addPyFile it; Spark inserts it into every worker's
-    sys.path per task.  Idempotent per SparkContext."""
-    sc = spark.sparkContext
-    if getattr(sc, "_wikihadoop_pkg_shipped", False):
-        return
+def _package_zip() -> str:
+    """Zip this package's sources (``.py`` plus the ``_native.c``
+    kernel, which workers compile from the zip) into the temp dir and
+    return the path.  Content-hashed, so it is built once per tree."""
     import hashlib
     import tempfile
     import zipfile
@@ -43,7 +34,7 @@ def _ship_package(spark: SparkSession) -> None:
     sources = []
     for dirpath, _dirnames, filenames in os.walk(pkg_root):
         for fn in sorted(filenames):
-            if fn.endswith(".py"):
+            if fn.endswith((".py", ".c")):
                 sources.append(os.path.join(dirpath, fn))
     sources.sort()
     # content-hash the cache key: an mtime check would let a different
@@ -68,7 +59,23 @@ def _ship_package(spark: SparkSession) -> None:
                     ),
                 )
         os.replace(tmp, zpath)
-    sc.addPyFile(zpath)
+    return zpath
+
+
+def _ship_package(spark: SparkSession) -> None:
+    """Make ``wikihadoop_spark`` importable in executor Python workers.
+
+    Cloudpickle serializes the DataSource class and the UDF closures'
+    module-level references BY NAME, so workers must import this
+    package — but the driver's session may have been created without
+    the repo on PYTHONPATH (driver-side imports then work via sys.path
+    manipulation while workers fail with ModuleNotFoundError).  Zip the
+    package once and addPyFile it; Spark inserts it into every worker's
+    sys.path per task.  Idempotent per SparkContext."""
+    sc = spark.sparkContext
+    if getattr(sc, "_wikihadoop_pkg_shipped", False):
+        return
+    sc.addPyFile(_package_zip())
     sc._wikihadoop_pkg_shipped = True
 
 

@@ -23,15 +23,19 @@ memory — and replaces the physical strategy with Spark-native design:
   reads past its end to finish its last owned page.  Duplicates and
   gaps are structurally impossible (vs the reference's statistical
   bounds above).
-- **Flat typed rows, not XML blobs.**  Revisions come out as columns
-  (FIXTURES.md §1); downstream pairing is a window ``lag`` — or
-  source-side streaming pairing (``pair_revisions`` option) for
-  pathological multi-GB page histories, the analog of the reference's
-  prevRevision buffer.
-- **Column pruning.**  The reader receives the pruned schema and
-  skips wikitext extraction when ``text``/``prev_text`` are not
-  selected — the lazy-parse strategy the reference documents
-  (README.rst:264-271) done through the engine instead of by hand.
+- **Flat typed rows, paired and diffed in the scan.**  Revisions come
+  out as columns (FIXTURES.md §1), each carrying its predecessor
+  (``prev_rev_id``, ``prev_text``, ``beginningofpage``) and the token
+  diff against it (``ops``).  The owner rule keeps a page inside one
+  partition, so pairing is the reference's one-revision buffer
+  (StreamWikiDumpInputFormat.java:298-429) and the diff runs where the
+  texts already are: no text shuffle, no second Python stage.
+- **The schema is the projection.**  Spark does not push column
+  pruning into a Python data source, so the reader computes exactly
+  the columns of the schema it is given (``read_wikidump(schema=...)``
+  or ``.schema(...)``): no wikitext extraction without ``text``,
+  ``prev_text`` or ``ops``, and no diff without ``ops`` — the
+  lazy-parse strategy the reference documents (README.rst:264-271).
 
 Compressed dumps: ``.bz2`` files SPLIT like uncompressed ones — the
 block-aligned strategy of the reference (SeekableInputStream.java:50-57,
@@ -79,8 +83,12 @@ BASE_SCHEMA_DDL = (
     "user_id long, user_text string, user_ip string, "
     "sha1 string, text_bytes long, text string"
 )
-PAIRED_EXTRA_DDL = "prev_rev_id long, prev_text string, beginningofpage boolean"
-OPS_EXTRA_DDL = "ops array<struct<position:bigint,action:int,content:string>>"
+# the source's fixed schema: every revision paired and diffed in the scan
+SCHEMA_DDL = (
+    f"{BASE_SCHEMA_DDL}, prev_rev_id long, prev_text string, "
+    "beginningofpage boolean, "
+    "ops array<struct<position:bigint,action:int,content:string>>"
+)
 
 
 class _TagScanner:
@@ -338,14 +346,6 @@ class WikidumpReader(DataSourceReader):
             raise ValueError("wikidump source requires a path")
         self._split_size = int(options.get("splitsize", 32 * 1024 * 1024))
         self._exclude = options.get("excludepageswith")
-        self._paired = str(options.get("pair_revisions", "false")).lower() == "true"
-        # compute_diffs: run the token diff INSIDE the source partition
-        # (the reference's in-mapper architecture) — the ops column
-        # comes out of the scan and the two texts never cross the
-        # Python->JVM->Python Arrow boundary unless selected
-        self._diffs = str(options.get("compute_diffs", "false")).lower() == "true"
-        if self._diffs:
-            self._paired = True  # diffing implies pairing
         self._pushed: dict[str, object] = {}  # page-level equality filters
 
     def pushFilters(self, filters):
@@ -413,9 +413,10 @@ class WikidumpReader(DataSourceReader):
         import pyarrow as pa
 
         fields = [f.name for f in self._full_schema.fields]
-        # diff only when the ops column survives pruning; diffs need
-        # the texts internally even when neither text column is selected
-        compute_ops = self._diffs and "ops" in fields
+        # the token diff runs in the scan (the reference's in-mapper
+        # shape) only when ops is asked for; it needs the texts even
+        # when neither text column is
+        compute_ops = "ops" in fields
         want_text = "text" in fields or "prev_text" in fields or compute_ops
         exclude = re.compile(self._exclude.encode()) if self._exclude else None
 
@@ -456,26 +457,16 @@ class WikidumpReader(DataSourceReader):
             scanner = _TagScanner(f, base_offset=0)
             end_fn = lambda: partition.end  # noqa: E731
 
-        arrow_type = {
-            "page_id": pa.int64(), "title": pa.string(), "ns": pa.int32(),
-            "redirect": pa.string(), "rev_id": pa.int64(), "rev_seq": pa.int32(),
-            "parent_id": pa.int64(), "ts": pa.timestamp("us"),
-            "comment": pa.string(), "minor": pa.bool_(), "model": pa.string(),
-            "format": pa.string(), "user_id": pa.int64(), "user_text": pa.string(),
-            "user_ip": pa.string(), "sha1": pa.string(), "text_bytes": pa.int64(),
-            "text": pa.string(), "prev_rev_id": pa.int64(),
-            "prev_text": pa.string(), "beginningofpage": pa.bool_(),
-            "ops": pa.list_(
-                pa.struct(
-                    [
-                        ("position", pa.int64()),
-                        ("action", pa.int32()),
-                        ("content", pa.string()),
-                    ]
-                )
-            ),
-        }
-        schema = pa.schema([(c, arrow_type[c]) for c in fields])
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = to_arrow_schema(self._full_schema)
+
+        def batch() -> pa.RecordBatch:
+            return pa.RecordBatch.from_arrays(
+                [pa.array([r.get(f.name) for r in batch_rows], type=f.type) for f in schema],
+                schema=schema,
+            )
+
         batch_rows, batch_bytes = [], 0
         # flush on row count or accumulated text size — bounds task memory
         max_rows, max_bytes = 2048, 32 << 20
@@ -501,7 +492,7 @@ class WikidumpReader(DataSourceReader):
         gc_was_enabled = gc.isenabled()
         gc.disable()
         try:
-            for row in self._read_pages(scanner, end_fn, fields, want_text, exclude):
+            for row in self._read_pages(scanner, end_fn, want_text, exclude):
                 if compute_ops:
                     row["ops"] = list(
                         token_diff(
@@ -513,22 +504,16 @@ class WikidumpReader(DataSourceReader):
                 t = row.get("text")
                 batch_bytes += len(t) if t else 64
                 if len(batch_rows) >= max_rows or batch_bytes >= max_bytes:
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array([r.get(c) for r in batch_rows], type=arrow_type[c]) for c in fields],
-                        schema=schema,
-                    )
+                    yield batch()
                     batch_rows, batch_bytes = [], 0
             if batch_rows:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([r.get(c) for r in batch_rows], type=arrow_type[c]) for c in fields],
-                    schema=schema,
-                )
+                yield batch()
         finally:
             if gc_was_enabled:
                 gc.enable()
             f.close()
 
-    def _read_pages(self, scanner, end_fn, fields, want_text, exclude):
+    def _read_pages(self, scanner, end_fn, want_text, exclude):
         while True:
             # Owner rule: only pages whose <page> tag starts inside
             # the partition's ownership range (byte range for plain
@@ -581,12 +566,13 @@ class WikidumpReader(DataSourceReader):
                     "rev_seq": rev_seq,
                     **row,
                 }
-                if self._paired:
-                    base["prev_rev_id"] = prev_rev_id
-                    base["prev_text"] = prev_text if want_text else None
-                    base["beginningofpage"] = rev_seq == 1
-                    prev_rev_id = base["rev_id"]
-                    prev_text = base["text"] if want_text else ""
+                # the reference's one-revision buffer: page start pairs
+                # with an empty dummy revision
+                base["prev_rev_id"] = prev_rev_id
+                base["prev_text"] = prev_text if want_text else None
+                base["beginningofpage"] = rev_seq == 1
+                prev_rev_id = base["rev_id"]
+                prev_text = base["text"] if want_text else ""
                 yield base
                 nxt = scanner.find_first([REV_OPEN, PAGE_CLOSE])
                 if nxt is None:
@@ -692,16 +678,7 @@ class WikidumpDataSource(DataSource):
         return "wikidump"
 
     def schema(self) -> str:
-        diffs = str(self.options.get("compute_diffs", "false")).lower() == "true"
-        paired = diffs or (
-            str(self.options.get("pair_revisions", "false")).lower() == "true"
-        )
-        ddl = BASE_SCHEMA_DDL
-        if paired:
-            ddl += f", {PAIRED_EXTRA_DDL}"
-        if diffs:
-            ddl += f", {OPS_EXTRA_DDL}"
-        return ddl
+        return SCHEMA_DDL
 
     def reader(self, schema: StructType) -> WikidumpReader:
         return WikidumpReader(schema, dict(self.options))
@@ -717,9 +694,15 @@ def register_wikidump(spark: "SparkSession") -> None:
     spark.dataSource.register(WikidumpDataSource)
 
 
-def read_wikidump(spark: "SparkSession", path: str, **options) -> "DataFrame":
+def read_wikidump(
+    spark: "SparkSession", path: str, schema: str = SCHEMA_DDL, **options
+) -> "DataFrame":
+    """The dump's revisions.  ``schema`` selects the columns the scan
+    computes (a narrower one, e.g. ``BASE_SCHEMA_DDL``, skips pairing
+    texts and diffs); passing it also spares ``load()`` the round trip
+    to the Python planner that asks the source for its schema."""
     register_wikidump(spark)
-    reader = spark.read.format("wikidump").option("path", path)
+    reader = spark.read.format("wikidump").schema(schema).option("path", path)
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader.load()
