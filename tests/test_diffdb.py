@@ -5,6 +5,9 @@ from __future__ import annotations
 
 import glob
 import gzip
+import os
+
+import pytest
 
 from wikihadoop_spark.functions.diffs import apply_diff
 from wikihadoop_spark.plans.diffdb import build_diffdb, write_diffdb_tsv
@@ -155,6 +158,13 @@ def test_golden_bytes_vs_published_rows(spark, tmp_path):
         return t.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
     ref = "/root/reference/fileformat.rst"
+    if not os.path.exists(ref):
+        # like test_reference_page_sample_golden: the published rows
+        # ship with the reference checkout, not with this repo
+        pytest.skip(
+            "reference fileformat.rst not available: byte-conformance "
+            "against the published rows is not checked"
+        )
     raw_lines = open(ref, "rb").read().split(b"\n")
     # the published block has CRLF endings; the payload is the CR-less line
     published = [raw_lines[i].rstrip(b"\r").decode() for i in (6, 7, 8)]

@@ -170,6 +170,98 @@ def test_py2_repr():
     assert py2_repr_value(42) == "42"
 
 
+def _oracle_py2_repr_str(s: str) -> str:
+    """py2 unicode repr, spelled out per character (the encoder's
+    earlier implementation, kept as the fuzz oracle)."""
+    quote = "'"
+    if "'" in s and '"' not in s:
+        quote = '"'
+    out = ["u", quote]
+    for ch in s:
+        cp = ord(ch)
+        if ch == "\\" or ch == quote:
+            out.append("\\" + ch)
+        elif ch == "\n":
+            out.append("\\n")
+        elif ch == "\r":
+            out.append("\\r")
+        elif ch == "\t":
+            out.append("\\t")
+        elif cp < 0x20 or cp == 0x7F:
+            out.append(f"\\x{cp:02x}")
+        elif cp >= 0x80:
+            if cp <= 0xFF:
+                out.append(f"\\x{cp:02x}")
+            elif cp <= 0xFFFF:
+                out.append(f"\\u{cp:04x}")
+            else:
+                out.append(f"\\U{cp:08x}")
+        else:
+            out.append(ch)
+    out.append(quote)
+    return "".join(out)
+
+
+def _oracle_py2_repr_bytes(s: str) -> str:
+    """py2 byte-string repr of UTF-8 text, spelled out per byte (the
+    encoder's earlier implementation, kept as the fuzz oracle)."""
+    data = s.encode("utf-8")
+    quote = b"'"
+    if b"'" in data and b'"' not in data:
+        quote = b'"'
+    out = [quote.decode()]
+    q = quote[0]
+    for b in data:
+        if b == 0x5C or b == q:
+            out.append("\\" + chr(b))
+        elif b == 0x0A:
+            out.append("\\n")
+        elif b == 0x0D:
+            out.append("\\r")
+        elif b == 0x09:
+            out.append("\\t")
+        elif b < 0x20 or b >= 0x7F:
+            out.append(f"\\x{b:02x}")
+        else:
+            out.append(chr(b))
+    out.append(quote.decode())
+    return "".join(out)
+
+
+def test_py2_repr_fuzz_vs_per_char_oracle():
+    """The builtin-based encoders (py3 ``ascii`` / bytes ``repr``) are
+    char-for-char the per-character py2 rules on 200k random strings:
+    quotes, backslashes, control chars, \\x7f, Latin-1, BMP, astral
+    and lone surrogates (which neither side can UTF-8 encode)."""
+    import random
+
+    from wikihadoop_spark.functions.compat import py2_repr_bytes
+
+    pools = [
+        "'\"\\",
+        "".join(map(chr, range(0x20))) + "\x7f",
+        "abc xyz:019",
+        "".join(map(chr, range(0x80, 0x100))),
+        "\u0100\u5bff\ufeff\uffff",
+        "\U0001f600\U00010000\U0010ffff",
+        "\ud800\udbff\udc00\udfff",
+    ]
+    rng = random.Random(2024)
+
+    def outcome(fn, s):
+        try:
+            return fn(s)
+        except UnicodeEncodeError:
+            return UnicodeEncodeError
+
+    for _ in range(200_000):
+        s = "".join(
+            rng.choice(rng.choice(pools)) for _ in range(rng.randrange(12))
+        )
+        assert py2_repr_str(s) == _oracle_py2_repr_str(s), s
+        assert outcome(py2_repr_bytes, s) == outcome(_oracle_py2_repr_bytes, s), s
+
+
 # -- optional C kernel (functions/_native.c) ------------------------------
 
 

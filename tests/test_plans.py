@@ -155,9 +155,10 @@ def test_media_metadata_prunes_documents_scan(spark):
 
 def test_in_source_diff_no_second_python_stage(spark, tmp_path):
     """The default read_wikidump -> build_diffdb plan pairs and diffs
-    inside the scan: ops come off the scan, so there is no Window (the
-    pairing shuffle) and no BroadcastExchange (the namespace join), and
-    the only Python eval is the TSV formatter at the sink."""
+    inside the scan: ops come off the scan's one MapInArrow (no
+    DataSource BatchScan), so there is no Window (the pairing shuffle)
+    and no BroadcastExchange (the namespace join), and the only Python
+    eval is the TSV formatter at the sink."""
     from wikihadoop_spark.plans.diffdb import build_diffdb, diffdb_tsv_lines
     from wikihadoop_spark.sources.wikidump import read_wikidump
 
@@ -169,14 +170,33 @@ def test_in_source_diff_no_second_python_stage(spark, tmp_path):
         diffdb.dropDuplicates(["rev_id"]).orderBy("page_id", "rev_id")
     )
     plan = sink._jdf.queryExecution().executedPlan().toString()
+    assert "BatchScan wikidump" not in plan
     assert "Window" not in plan
     assert "BroadcastExchange" not in plan
     lines = plan.splitlines()
-    # ops come off the scan (a leaf), so no Exchange sits below them
-    (scan,) = [l for l in lines if "BatchScan wikidump" in l]
-    assert "ops#" in scan
+    (i,) = [n for n, l in enumerate(lines) if "MapInArrow" in l]
+    assert "ops#" in lines[i]
+    # the scan reads its seed of partition ids directly: no Exchange
+    # sits below the ops
+    assert not any("Exchange" in l for l in lines[i + 1 :]), plan
     evals = [l for l in lines if "EvalPython" in l]
     assert len(evals) == 1 and "fmt(" in evals[0], evals
+
+
+def test_wikidump_scan_size_is_not_tiny(spark, tmp_path):
+    """The optimizer must not size the scan by its seed of partition
+    ids (a few bytes, under autoBroadcastJoinThreshold): a join would
+    then broadcast the dump's revisions."""
+    import os
+
+    from wikihadoop_spark.sources.wikidump import read_wikidump
+
+    from dump_fixtures import big_dump, write_dump
+
+    path = write_dump(tmp_path, big_dump(n_pages=50, revs_per_page=3))
+    df = read_wikidump(spark, path, splitsize="4096")
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert int(size) >= os.path.getsize(path)
 
 
 def test_bucketed_join_is_exchange_free(spark, tmp_path):

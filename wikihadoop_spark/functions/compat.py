@@ -13,38 +13,11 @@ from __future__ import annotations
 def py2_repr_str(s: str) -> str:
     """Python-2 ``repr(u'...')`` of a text value.
 
-    Rules reproduced: prefix ``u``; prefer single quotes, switch to
-    double only when the text has ' and no "; escape backslash, the
-    quote, \\n/\\r/\\t; other chars < 0x20 and >= 0x7f become \\xNN /
-    \\uNNNN / \\UNNNNNNNN (py2 repr escapes ALL non-ascii, unlike py3).
-    """
-    quote = "'"
-    if "'" in s and '"' not in s:
-        quote = '"'
-    out = ["u", quote]
-    for ch in s:
-        cp = ord(ch)
-        if ch == "\\" or ch == quote:
-            out.append("\\" + ch)
-        elif ch == "\n":
-            out.append("\\n")
-        elif ch == "\r":
-            out.append("\\r")
-        elif ch == "\t":
-            out.append("\\t")
-        elif cp < 0x20 or cp == 0x7F:
-            out.append(f"\\x{cp:02x}")
-        elif cp >= 0x80:
-            if cp <= 0xFF:
-                out.append(f"\\x{cp:02x}")
-            elif cp <= 0xFFFF:
-                out.append(f"\\u{cp:04x}")
-            else:
-                out.append(f"\\U{cp:08x}")
-        else:
-            out.append(ch)
-    out.append(quote)
-    return "".join(out)
+    Py3 ``ascii()`` is py2 unicode ``repr`` without the ``u`` prefix:
+    single quotes unless the text has ' and no "; backslash, the quote
+    and \\n/\\r/\\t escaped; other chars < 0x20, 0x7f and every
+    non-ascii char as \\xNN / \\uNNNN / \\UNNNNNNNN."""
+    return "u" + ascii(s)
 
 
 def py2_repr_bytes(s: str) -> str:
@@ -55,29 +28,9 @@ def py2_repr_bytes(s: str) -> str:
     security presidential directive'`` with no ``u`` prefix
     (fileformat.rst:7-9, revision_differ.py:154) — while comment /
     user_text repr as unicode.  Non-ascii text appears as per-UTF-8-byte
-    ``\\xNN`` escapes; quote choice and control escapes match py2 str
-    repr."""
-    data = s.encode("utf-8")
-    quote = b"'"
-    if b"'" in data and b'"' not in data:
-        quote = b'"'
-    out = [quote.decode()]
-    q = quote[0]
-    for b in data:
-        if b == 0x5C or b == q:  # backslash or the chosen quote
-            out.append("\\" + chr(b))
-        elif b == 0x0A:
-            out.append("\\n")
-        elif b == 0x0D:
-            out.append("\\r")
-        elif b == 0x09:
-            out.append("\\t")
-        elif b < 0x20 or b >= 0x7F:
-            out.append(f"\\x{b:02x}")
-        else:
-            out.append(chr(b))
-    out.append(quote.decode())
-    return "".join(out)
+    ``\\xNN`` escapes; py3 bytes ``repr`` has py2 str ``repr``'s quote
+    choice and escapes, behind a ``b`` prefix."""
+    return repr(s.encode("utf-8"))[1:]
 
 
 def py2_repr_value(v) -> str:

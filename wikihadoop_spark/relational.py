@@ -404,7 +404,7 @@ def _wikidump_gate(spark: SparkSession, sf: str, *, use_bz2: bool) -> DataFrame:
             # timezone-invariant: the dump's <timestamp> is UTC
             # wall-clock in an ntz column; unix_timestamp(cast) would
             # shift it by the session timezone (plans/diffdb.py)
-            epoch_seconds_ntz(F.col("ts")).alias("epoch"),
+            F.expr(epoch_seconds_ntz("ts")).alias("epoch"),
             F.col("comment"),
             F.col("minor"),
             F.col("user_id"),

@@ -1,4 +1,4 @@
-"""wikidump — Spark Python DataSource for MediaWiki full-history XML dumps.
+"""wikidump — Spark reader for MediaWiki full-history XML dumps.
 
 The reference (whym/wikihadoop) solves this with a Hadoop InputFormat:
 a driver-side full-file scan plans page-aligned splits
@@ -31,11 +31,18 @@ memory — and replaces the physical strategy with Spark-native design:
   (StreamWikiDumpInputFormat.java:298-429) and the diff runs where the
   texts already are: no text shuffle, no second Python stage.
 - **The schema is the projection.**  Spark does not push column
-  pruning into a Python data source, so the reader computes exactly
-  the columns of the schema it is given (``read_wikidump(schema=...)``
-  or ``.schema(...)``): no wikitext extraction without ``text``,
+  pruning into Python, so the reader computes exactly the columns of
+  the schema it is given (``read_wikidump(schema=...)`` or
+  ``.schema(...)``): no wikitext extraction without ``text``,
   ``prev_text`` or ``ops``, and no diff without ``ops`` — the
   lazy-parse strategy the reference documents (README.rst:264-271).
+- **Two front ends, one reader.**  ``read_wikidump`` (batch) plans
+  the partitions on the driver, as the reference's ``getSplits``
+  does, and runs ``WikidumpReader.read`` per partition under
+  ``mapInArrow``; no Python planner process starts before the tasks.
+  ``WikidumpDataSource`` is the Python DataSource adapter for
+  ``spark.readStream`` and ``spark.read.format("wikidump")``, which
+  also push page-level equality filters into the scan.
 
 Compressed dumps: ``.bz2`` files SPLIT like uncompressed ones — the
 block-aligned strategy of the reference (SeekableInputStream.java:50-57,
@@ -699,10 +706,30 @@ def read_wikidump(
 ) -> "DataFrame":
     """The dump's revisions.  ``schema`` selects the columns the scan
     computes (a narrower one, e.g. ``BASE_SCHEMA_DDL``, skips pairing
-    texts and diffs); passing it also spares ``load()`` the round trip
-    to the Python planner that asks the source for its schema."""
-    register_wikidump(spark)
-    reader = spark.read.format("wikidump").schema(schema).option("path", path)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
+    texts and diffs).  Options are the source's, as for
+    ``spark.read.format("wikidump")``.
+
+    Partitions are planned here, on the driver, and each task reads one
+    with ``WikidumpReader.read`` under ``mapInArrow``: the Python
+    DataSource API would start two planner processes per query first.
+    The seed carries one partition id per partition; it is a
+    ``LogicalRDD``, whose size the optimizer treats as unknown, so the
+    dump is never taken for a broadcastable table."""
+    from pyspark.sql import DataFrame
+    from pyspark.sql.utils import to_str
+
+    struct = StructType.fromDDL(schema)
+    # the DataSource's option semantics: case-insensitive keys, strings
+    opts = {k.lower(): to_str(v) for k, v in options.items()}
+    opts["path"] = path
+    reader = WikidumpReader(struct, opts)
+    parts = reader.partitions()
+
+    def read(batches):
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                yield from reader.read(parts[i])
+
+    ids = spark.range(len(parts), numPartitions=len(parts))._jdf.toDF()
+    seed = spark._jsparkSession.createDataFrame(ids.javaRDD(), ids.schema())
+    return DataFrame(seed, spark).mapInArrow(read, struct)
