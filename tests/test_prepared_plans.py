@@ -128,3 +128,40 @@ def test_memo_entries_die_with_their_context(spark):
     # rebuild repopulates
     QUERIES["q1_pricing_summary"](spark, SF)
     assert any(k[1] == "q1_pricing_summary" for k in _PREPARED_CACHE)
+
+
+def test_scale_a_b_a_matches_fresh_builds(spark):
+    """A memo entry must never answer for another scale.  Temp-view
+    queries (``spark.sql`` over registered views) name their relations,
+    which resolve against the views last registered — so they are never
+    memoized, and sf A after sf B returns sf A's rows again."""
+    from collections import Counter
+
+    from wikihadoop_spark.relational import _memoizable
+
+    big = os.path.join(os.path.dirname(SF), "sf0.01")
+    for name in ("scalar_subquery", "correlated_exists", "agg_grouping_sets"):
+        assert name in _PURE_PLAN_QUERIES
+        fresh = {}
+        for sf in (SF, big):
+            df = QUERIES[name].__wrapped__(spark, sf)
+            assert not _memoizable(df)
+            fresh[sf] = Counter(df.collect())
+        for sf in (SF, big, SF):
+            got = Counter(QUERIES[name](spark, sf).collect())
+            assert got == fresh[sf], (name, sf)
+        assert not any(k[1] == name for k in _PREPARED_CACHE)
+
+
+def test_new_session_gets_its_own_scan_frames(spark):
+    """Scan frames are keyed on the session: a ``newSession()`` with a
+    different conf must get frames bound to itself, not the first
+    session's."""
+    first = load_table(spark, SF, "orders")
+    other = spark.newSession()
+    other.conf.set("spark.sql.shuffle.partitions", "3")
+    mine = load_table(other, SF, "orders")
+    assert mine is not first
+    assert mine.sparkSession is other
+    assert first.sparkSession is spark
+    assert load_table(other, SF, "orders") is mine  # still memoized

@@ -13,7 +13,8 @@ operators (dedup, similarity search, text analysis) the modern engine
 needs.
 
 Layout:
-  session.py    — SparkSession factory + oracle-parity session config
+  session.py    — SparkSession factory + oracle-parity session config;
+                  the worker-only zip-importer hook installed below
   catalog.py    — testdata table loading (handles nanos timestamps)
   relational.py — named query catalog + DuckDB oracle SQL (driver contract)
   operators/    — pairing (lag), asof/range joins, dedup, components, similarity, topk
@@ -23,4 +24,8 @@ Layout:
   streaming/    — structured-streaming windows/session/stateful ops
 """
 
+from .session import install_worker_zip_cache
+
 __version__ = "0.1.0"
+
+install_worker_zip_cache()

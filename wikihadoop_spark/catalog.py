@@ -44,17 +44,21 @@ BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"
 # The stat key invalidates the entry whenever the file is rewritten.
 _SCHEMA_CACHE: dict[tuple, T.StructType] = {}
 
-# (context identity, path, mtime_ns, size) -> the built scan DataFrame
-# (round-18).  Even with the schema cache, every ``read.parquet`` call
-# re-creates the reader and the file index in the JVM (~30 ms per
-# table per query build — q5 loads five tables).  A DataFrame is an
-# immutable logical plan, so returning the SAME object on a repeat
-# load is plan-construction memoization in the round-17 class
-# (expression Columns, schemas, partition counts): plans, values, and
-# results are identical; every action still re-executes the full scan.
+# (context identity, id(session), path, mtime_ns, size) -> the built
+# scan DataFrame (round-18).  Even with the schema cache, every
+# ``read.parquet`` call re-creates the reader and the file index in
+# the JVM (~30 ms per table per query build — q5 loads five tables).
+# A DataFrame is an immutable logical plan, so returning the SAME
+# object on a repeat load is plan-construction memoization in the
+# round-17 class (expression Columns, schemas, partition counts):
+# plans, values, and results are identical; every action still
+# re-executes the full scan.
 # Keyed by the stable context identity (a restarted JVM must rebuild —
-# the plan holds gateway references) and invalidated by the stat key
-# on any file rewrite.  Regular files only, same as _SCHEMA_CACHE.
+# the plan holds gateway references) and the session (a frame runs
+# under its session's conf; the cached frame holds that session, so
+# its id() cannot be reused while the entry lives), and invalidated by
+# the stat key on any file rewrite.  Regular files only, same as
+# _SCHEMA_CACHE.
 _TABLE_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -86,7 +90,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from ._exprs import _ctx_id
 
         ctx = _ctx_id()
-        cached = _TABLE_CACHE.get((ctx, *key))
+        cached = _TABLE_CACHE.get((ctx, id(spark), *key))
         if cached is not None:
             return cached
     if key is not None and key in _SCHEMA_CACHE:
@@ -110,7 +114,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # replaces a plan-to-RDD conversion on every query build
         df._wikihadoop_scan_stat = key
         _evict_dead_context_tables(ctx)
-        _TABLE_CACHE[(ctx, *key)] = df
+        _TABLE_CACHE[(ctx, id(spark), *key)] = df
     return df
 
 

@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -84,15 +85,18 @@ _SCAN_PARTS_CACHE: dict[tuple, int] = {}
 #     invocations (the round-17 verdict's unpersist-discipline trap);
 # (c) scans ONLY the ten catalog tables under sf_dir — the memo key's
 #     stat tuple must cover every input that could change.
+# A build whose plan reads a relation by name (``spark.sql`` over temp
+# views) is never stored: checked once per key on the miss path.
 # The key carries the stable context identity (a restarted JVM must
-# rebuild: plans hold gateway references) and the (mtime_ns, size)
-# stat of every catalog table, so any rewrite of the inputs
-# invalidates the entry; non-regular / missing table files disable
-# the memo entirely for that sf_dir.
+# rebuild: plans hold gateway references), the session (its scans run
+# under its conf) and the (mtime_ns, size) stat of every catalog
+# table, so any rewrite of the inputs invalidates the entry;
+# non-regular / missing table files disable the memo entirely for
+# that sf_dir.
 _PREPARED_CACHE: dict[tuple, DataFrame] = {}
 
 
-def _prepared_key(sf_dir: str, name: str) -> tuple | None:
+def _prepared_key(spark: SparkSession, sf_dir: str, name: str) -> tuple | None:
     import os as _os
     import stat as _stat
 
@@ -110,7 +114,32 @@ def _prepared_key(sf_dir: str, name: str) -> tuple | None:
         return None
     from ._exprs import _ctx_id
 
-    return (_ctx_id(), name, sfd, tuple(stats))
+    # a cached frame holds its session, so id(spark) cannot be reused
+    # while the entry lives
+    return (_ctx_id(), name, sfd, tuple(stats), id(spark))
+
+
+def _memoizable(df: DataFrame) -> bool:
+    """False when the plan, or a subquery in it, has an
+    ``UnresolvedRelation`` leaf (``spark.sql`` over temp views), or has
+    no JVM plan to inspect.  Such a leaf resolves against the session's
+    CURRENT views on every analysis, so a memoized plan would read
+    whatever sf_dir the views were last registered from, not the one in
+    its key."""
+    try:
+        plan = df._jdf.queryExecution().logical()
+        plans = [plan]
+        subqueries = plan.subqueriesAll().iterator()
+        while subqueries.hasNext():
+            plans.append(subqueries.next())
+        for p in plans:
+            leaves = p.collectLeaves().iterator()
+            while leaves.hasNext():
+                if leaves.next().nodeName() == "UnresolvedRelation":
+                    return False
+    except (AttributeError, Py4JError):
+        return False
+    return True
 
 
 def _evict_dead_context_prepared(ctx: tuple) -> None:
@@ -125,15 +154,16 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
             @functools.wraps(fn)
             def prepared(spark: SparkSession, sf_dir: str) -> DataFrame:
-                key = _prepared_key(sf_dir, name)
+                key = _prepared_key(spark, sf_dir, name)
                 if key is None:
                     return fn(spark, sf_dir)
                 cached = _PREPARED_CACHE.get(key)
                 if cached is None:
-                    cached = fn(spark, sf_dir)
-                    _evict_dead_context_prepared(key[0])
-                    _PREPARED_CACHE[key] = cached
-                    return cached
+                    df = fn(spark, sf_dir)
+                    if _memoizable(df):
+                        _evict_dead_context_prepared(key[0])
+                        _PREPARED_CACHE[key] = df
+                    return df
                 # keep the configure_session contract (UTC re-assert)
                 # that a fresh build would have run
                 from .session import configure_session
@@ -149,10 +179,13 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
                 # Re-wrapping replans against the CALLER's current
                 # session every time; only the py4j plan-assembly
                 # chain (the expensive part) is amortized.
-                jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-                    spark._jsparkSession,
-                    cached._jdf.queryExecution().logical(),
-                )
+                try:
+                    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+                        spark._jsparkSession,
+                        cached._jdf.queryExecution().logical(),
+                    )
+                except (AttributeError, Py4JError):  # no classic Dataset here
+                    return fn(spark, sf_dir)
                 return DataFrame(jdf, spark)
 
             QUERIES[name] = prepared
