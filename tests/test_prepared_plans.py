@@ -1,54 +1,92 @@
-"""Drills for the round-18 prepared-plan memo (relational.py).
+"""Drills for the prepared-plan memo (relational.py).
 
-The memo returns the SAME DataFrame object for a repeat invocation of
-an allowlisted query — legal only because those builds are pure plan
-assembly.  These drills machine-verify the three eligibility
-conditions for EVERY allowlisted name (so a future edit that adds a
-build job, a persist, or an off-catalog scan to a memoized query
-fails loudly here), and the memo's invalidation semantics.
+The memo reuses the logical plan of a repeat invocation — legal only
+because the builds it stores are pure plan assembly.  Eligibility is
+derived from each key's first build (zero Spark jobs, catalog-only
+leaves, no relation read by name) and the verdict is kept on the
+session.  These drills check every stored build independently (so a
+query edit that adds a build job, a persist, or an off-catalog scan
+and still gets stored fails loudly here), that negative verdicts are
+kept, that a memo hit never answers for another scale or a rewritten
+input, and that each memo lives and dies with its session or context.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import subprocess
+import sys
+import textwrap
+from collections import Counter
 
+import pytest
+
+from wikihadoop_spark import _exprs, relational
 from wikihadoop_spark.catalog import TABLE_NAMES, load_table
-from wikihadoop_spark.relational import (
-    _PREPARED_CACHE,
-    _PURE_PLAN_QUERIES,
-    QUERIES,
-)
+from wikihadoop_spark.relational import ORACLE, QUERIES, _prepared_key
 
 SF = "/root/testdata/sf0.001"
+BIG = os.path.join(os.path.dirname(SF), "sf0.01")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# the catalog benchmark's queries whose builds are pure plan assembly
+BENCH_MEMOIZED = (
+    "q1_pricing_summary", "q5_revenue_by_nation", "window_rank_topk",
+    "range_join_near_orders", "minhash_lsh_pairs", "text_quality",
+)
 
 
-def test_allowlisted_builds_are_pure_plan_assembly(spark):
-    """Every allowlisted build must (a) run zero Spark jobs, (b) leave
-    no persisted relation in the optimized plan, and (c) scan only the
-    ten catalog tables under sf_dir.  Violating any of these would
-    turn the plan memo into result caching."""
+def _plans(spark) -> dict:
+    return getattr(spark, "_wikihadoop_prepared_plans", {})
+
+
+def _memoized(spark, sf: str) -> list[str]:
+    sfd = os.path.realpath(sf)
+    return sorted(
+        k[0] for k, v in _plans(spark).items() if k[1] == sfd and v is not None
+    )
+
+
+def _warm(spark, sf: str) -> None:
+    # first-touch footer inference is load_table's job, not the query's
+    for t in TABLE_NAMES:
+        load_table(spark, sf, t)
+
+
+@pytest.fixture(scope="module")
+def judged(spark):
+    """Every catalog query built once at SF with warm tables, so each
+    key carries its verdict; returns the memoized names."""
+    _warm(spark, SF)
+    for name in sorted(QUERIES):
+        QUERIES[name](spark, SF)
+    return _memoized(spark, SF)
+
+
+def test_memoized_builds_are_pure_plan_assembly(spark, judged):
+    """Every build the memo stored must (a) run zero Spark jobs in its
+    own job group, (b) leave no persisted relation in the optimized
+    plan, and (c) scan only the ten catalog tables under sf_dir —
+    checked here on a fresh build, independently of the memo's own
+    rule.  Violating any of these would turn the plan memo into result
+    caching."""
+    assert set(BENCH_MEMOIZED) <= set(judged)
+    for name in ("agg_grouping_sets", "dedup_clusters", "wikidump_roundtrip"):
+        assert name not in judged
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    for t in TABLE_NAMES:  # warm schema/table caches: first-touch
-        load_table(spark, SF, t)  # footer inference is load_table's job
-    ok_prefixes = tuple(
-        os.path.realpath(f"{SF}/{t}.parquet") for t in TABLE_NAMES
-    )
+    ok = {os.path.realpath(f"{SF}/{t}.parquet") for t in TABLE_NAMES}
     offenders = {}
-    for name in sorted(_PURE_PLAN_QUERIES):
+    for name in judged:
         group = f"prepared-drill-{name}"
         sc.setJobGroup(group, name)
         try:
-            df = QUERIES[name](spark, SF)
+            df = QUERIES[name].__wrapped__(spark, SF)
             jobs = len(tracker.getJobIdsForGroup(group))
             opt = df._jdf.queryExecution().optimizedPlan().toString()
             files = [f.replace("file:", "") for f in df.inputFiles()]
-            bad = [
-                f
-                for f in files
-                if not os.path.realpath(f).startswith(ok_prefixes)
-            ]
+            bad = [f for f in files if os.path.realpath(f) not in ok]
             if jobs or "InMemoryRelation" in opt or bad:
                 offenders[name] = {
                     "build_jobs": jobs,
@@ -58,8 +96,7 @@ def test_allowlisted_builds_are_pure_plan_assembly(spark):
         finally:
             sc.setJobGroup(None, None)
     assert not offenders, (
-        "queries in _PURE_PLAN_QUERIES whose build is no longer pure "
-        f"plan assembly — remove them from the allowlist: {offenders}"
+        f"memoized builds that are not pure plan assembly: {offenders}"
     )
 
 
@@ -87,12 +124,59 @@ def test_repeat_invocation_reuses_logical_plan_replans_physical(spark):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def test_non_allowlisted_query_is_not_memoized(spark):
+def test_job_running_build_is_not_memoized(spark):
     # sample_mixture's build scans range boundaries (real jobs) — it
     # must rebuild every invocation
-    assert "sample_mixture" not in _PURE_PLAN_QUERIES
+    _warm(spark, SF)
     QUERIES["sample_mixture"](spark, SF)
-    assert not any(k[1] == "sample_mixture" for k in _PREPARED_CACHE)
+    assert _plans(spark)[_prepared_key(SF, "sample_mixture")] is None
+
+
+def test_negative_verdict_is_kept(spark, monkeypatch):
+    """A key judged impure is never judged again, and its repeat
+    build costs exactly a fresh build's py4j round trips."""
+    _warm(spark, SF)
+    session = spark.newSession()  # an empty memo of its own
+    assert not _plans(session)
+    judge = relational._pure_plan
+    calls = []
+
+    def counted(*args):
+        calls.append(args)
+        return judge(*args)
+
+    monkeypatch.setattr(relational, "_pure_plan", counted)
+    for name in ("agg_grouping_sets", "dedup_clusters"):
+        before = len(calls)
+        QUERIES[name](session, SF)
+        assert len(calls) == before + 1, name
+        assert _plans(session)[_prepared_key(SF, name)] is None, name
+        QUERIES[name](session, SF)
+        assert len(calls) == before + 1, name  # verdict kept
+
+    client = spark.sparkContext._gateway._gateway_client
+    inner = client.send_command
+    trips = [0]
+
+    def counting(command, *args, **kwargs):
+        # a freed proxy's delete message depends on when Python's
+        # garbage collector runs, not on the build
+        if not command.startswith("m\nd\n"):
+            trips[0] += 1
+        return inner(command, *args, **kwargs)
+
+    def round_trips(build) -> int:
+        trips[0] = 0
+        client.send_command = counting
+        try:
+            df = build(session, SF)
+        finally:
+            client.send_command = inner
+        del df
+        return trips[0]
+
+    fn = QUERIES["agg_grouping_sets"]
+    assert round_trips(fn) == round_trips(fn.__wrapped__)
 
 
 def test_table_rewrite_invalidates_prepared_plan(spark, tmp_path):
@@ -103,31 +187,64 @@ def test_table_rewrite_invalidates_prepared_plan(spark, tmp_path):
     for t in TABLE_NAMES:
         shutil.copyfile(f"{SF}/{t}.parquet", sfd / f"{t}.parquet")
     real = os.path.realpath(str(sfd))
+    _warm(spark, str(sfd))
+
+    def keys():
+        return {k for k, v in _plans(spark).items() if k[1] == real and v is not None}
+
     QUERIES["q1_pricing_summary"](spark, str(sfd))
-    keys1 = {k for k in _PREPARED_CACHE if k[2] == real}
+    keys1 = keys()
+    assert len(keys1) == 1
     QUERIES["q1_pricing_summary"](spark, str(sfd))
-    assert {k for k in _PREPARED_CACHE if k[2] == real} == keys1  # hit
+    assert keys() == keys1  # hit
     # rewrite one input (fresh mtime): the stat key must miss
     li = sfd / "lineitem.parquet"
     os.utime(li, ns=(os.stat(li).st_mtime_ns + 1, os.stat(li).st_mtime_ns + 1))
+    _warm(spark, str(sfd))
     QUERIES["q1_pricing_summary"](spark, str(sfd))
-    keys2 = {k for k in _PREPARED_CACHE if k[2] == real}
-    assert len(keys2 - keys1) == 1  # a second, distinct entry
+    assert len(keys() - keys1) == 1  # a second, distinct entry
 
 
-def test_memo_entries_die_with_their_context(spark):
-    """Entries are keyed on the live context identity; the eviction
-    sweep drops any entry from another context so a restarted JVM can
-    never be served a plan holding dead gateway references."""
-    QUERIES["q1_pricing_summary"](spark, SF)
-    assert any(k[1] == "q1_pricing_summary" for k in _PREPARED_CACHE)
-    from wikihadoop_spark.relational import _evict_dead_context_prepared
+def test_memo_entries_die_with_their_context():
+    """Every memo lives on the object that owns it: a restarted session
+    (new context, same process) starts with empty plan, scan-frame and
+    Column memos, and memoizes afresh with the same rows."""
+    code = f"""
+        from wikihadoop_spark.relational import QUERIES
+        from wikihadoop_spark.session import get_spark
 
-    _evict_dead_context_prepared(("not-the-live-context",))
-    assert not _PREPARED_CACHE  # everything belonged to the live ctx
-    # rebuild repopulates
-    QUERIES["q1_pricing_summary"](spark, SF)
-    assert any(k[1] == "q1_pricing_summary" for k in _PREPARED_CACHE)
+        SF = {SF!r}
+        MEMOS = ("_wikihadoop_prepared_plans", "_wikihadoop_scan_frames")
+
+        def build_twice(spark):
+            QUERIES["q1_pricing_summary"](spark, SF)  # may infer schemas
+            QUERIES["q1_pricing_summary"](spark, SF)
+            plans = spark._wikihadoop_prepared_plans
+            assert any(v is not None for v in plans.values()), plans
+            return sorted(QUERIES["q1_pricing_summary"](spark, SF).collect())
+
+        spark = get_spark("memo-restart", cpus=2, shuffle_partitions=2)
+        sc = spark.sparkContext
+        rows = build_twice(spark)
+        assert sc._wikihadoop_columns
+        spark.stop()
+        again = get_spark("memo-restart", cpus=2, shuffle_partitions=2)
+        assert again is not spark and again.sparkContext is not sc
+        for attr in MEMOS:
+            assert not getattr(again, attr, None), attr
+        assert not getattr(again.sparkContext, "_wikihadoop_columns", None)
+        assert build_twice(again) == rows
+        again.stop()
+        print("RESTART-OK")
+    """
+    r = subprocess.run(
+        [sys.executable, "-c", textwrap.dedent(code)],
+        capture_output=True,
+        text=True,
+        timeout=600,
+        env={**os.environ, "PYTHONPATH": REPO},
+    )
+    assert "RESTART-OK" in r.stdout, r.stderr[-3000:]
 
 
 def test_scale_a_b_a_matches_fresh_builds(spark):
@@ -135,26 +252,80 @@ def test_scale_a_b_a_matches_fresh_builds(spark):
     queries (``spark.sql`` over registered views) name their relations,
     which resolve against the views last registered — so they are never
     memoized, and sf A after sf B returns sf A's rows again."""
-    from collections import Counter
-
-    from wikihadoop_spark.relational import _memoizable
-
-    big = os.path.join(os.path.dirname(SF), "sf0.01")
     for name in ("scalar_subquery", "correlated_exists", "agg_grouping_sets"):
-        assert name in _PURE_PLAN_QUERIES
         fresh = {}
-        for sf in (SF, big):
+        for sf in (SF, BIG):
             df = QUERIES[name].__wrapped__(spark, sf)
-            assert not _memoizable(df)
             fresh[sf] = Counter(df.collect())
-        for sf in (SF, big, SF):
+        for sf in (SF, BIG, SF):
             got = Counter(QUERIES[name](spark, sf).collect())
             assert got == fresh[sf], (name, sf)
-        assert not any(k[1] == name for k in _PREPARED_CACHE)
+        assert not any(k[0] == name and v is not None for k, v in _plans(spark).items())
+
+
+def test_scale_a_b_a_every_query_matches_fresh_plans(spark, judged):
+    """The sf A -> B -> A drill over every catalog query: after a pass
+    at sf0.01, each memo hit at sf0.001 must analyze to the same result
+    as a fresh build there.  The hit is analyzed first, so a plan that
+    resolves anything against the session's current state sees B's."""
+    _warm(spark, BIG)
+    for name in sorted(QUERIES):
+        QUERIES[name](spark, BIG)
+    wrong = []
+    for name in judged:
+        hit = QUERIES[name](spark, SF)._jdf.queryExecution().analyzed()
+        fresh = QUERIES[name].__wrapped__(spark, SF)._jdf.queryExecution().analyzed()
+        if not hit.sameResult(fresh):
+            wrong.append(name)
+    assert not wrong, f"memo hits that differ from a fresh build: {wrong}"
+
+
+def test_wikidump_queries_rebuild_after_gate_dump_deleted(spark):
+    """A ``read_wikidump`` seed is a LogicalRDD, an input the memo key
+    does not cover, so the wikidump queries are never memoized: a
+    repeat call rebuilds the deleted gate dump and returns the
+    oracle's rows."""
+    from parity_util import compare_query
+
+    from wikihadoop_spark.sources.gatedump import gate_dump_paths
+
+    _warm(spark, SF)
+    for name in ("wikidump_roundtrip", "wikidump_roundtrip_bz2", "wikidump_pairs_join"):
+        QUERIES[name](spark, SF)
+        assert _plans(spark)[_prepared_key(SF, name)] is None, name
+        for path in gate_dump_paths(SF):
+            if os.path.exists(path):
+                os.unlink(path)
+        ok, msg = compare_query(spark, name, QUERIES[name], ORACLE[name], SF)
+        assert ok, (name, msg)
+
+
+def test_column_memo_is_bounded(spark, monkeypatch):
+    """Integer Lloyd adds one K×D centroid key per iteration; the
+    per-context Column memo empties when it reaches its cap."""
+    from wikihadoop_spark.operators.quantize import ivf_build_int8
+
+    class Counted(dict):
+        stores = 0
+
+        def __setitem__(self, key, value):
+            Counted.stores += 1
+            super().__setitem__(key, value)
+
+    rows = [(i, [(i * 7) % 23 - 11, (i * 5) % 19 - 9, i % 13 - 6]) for i in range(40)]
+    df = spark.createDataFrame(rows, "vec_id bigint, q array<int>")
+    monkeypatch.setattr(_exprs, "_CACHE_MAX", 2)
+    monkeypatch.setattr(
+        spark.sparkContext, "_wikihadoop_columns", Counted(), raising=False
+    )
+    ivf_build_int8(df, k=4, iterations=12)
+    memo = spark.sparkContext._wikihadoop_columns
+    assert Counted.stores > 2  # the build made more keys than the cap
+    assert len(memo) <= 2
 
 
 def test_new_session_gets_its_own_scan_frames(spark):
-    """Scan frames are keyed on the session: a ``newSession()`` with a
+    """Scan frames are kept on the session: a ``newSession()`` with a
     different conf must get frames bound to itself, not the first
     session's."""
     first = load_table(spark, SF, "orders")

@@ -15,9 +15,12 @@ first build of an expression family pays the py4j cost, every later
 query build reuses the identical AST.  Plans, values, and results are
 bit-identical — only the Python-side construction cost changes.
 
-Cache keys incorporate the live SparkContext's id: literals hold JVM
-object references through the active gateway, so a restarted context
-(fresh JVM) must rebuild rather than reuse stale handles.
+The memo is a dict on the live SparkContext object: literals hold JVM
+object references through that context's gateway, so a restarted
+context (a new object) starts empty, and the entries die with the
+context that made them.  It is bounded: it empties when it reaches
+``_CACHE_MAX`` keys (integer Lloyd adds one K×D centroid key per
+iteration).  One pass over the whole catalog leaves about 60 keys.
 """
 
 from __future__ import annotations
@@ -25,40 +28,32 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import Any
 
-_CACHE: dict[tuple, Any] = {}
+_CACHE_MAX = 256
 
 
-def _ctx_id() -> tuple:
-    # stable context identity (round-18 ADVICE): id(sc) can be REUSED
-    # by CPython after a stopped context is garbage-collected, which
-    # would serve memoized Columns holding JVM references through the
-    # dead gateway.  (applicationId, startTime) is unique per JVM
-    # context lifetime.
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    if sc is None:
-        return ("none",)
-    # the identity lookup is itself 2 py4j round trips — memoize it ON
-    # the context object (the attribute dies with the object, and a
-    # recycled id() belongs to a NEW object without the attribute)
-    ident = getattr(sc, "_wikihadoop_ctx_ident", None)
-    if ident is None:
-        ident = (sc.applicationId, sc.startTime)
-        sc._wikihadoop_ctx_ident = ident
-    return ident
+def owned_memo(owner: Any, attr: str) -> dict:
+    """The memo dict kept on ``owner`` under ``attr``, created empty on
+    first use: it lives and dies with the object that owns it."""
+    memo = getattr(owner, attr, None)
+    if memo is None:
+        memo = {}
+        setattr(owner, attr, memo)
+    return memo
 
 
 def cached_exprs(key: tuple, builder: Callable[[], Any]) -> Any:
     """Memoize ``builder()`` (a Column or list/tuple of Columns) under
     ``key`` for the lifetime of the active SparkContext."""
-    full = (_ctx_id(), *key)
-    val = _CACHE.get(full)
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return builder()
+    memo = owned_memo(sc, "_wikihadoop_columns")
+    val = memo.get(key)
     if val is None:
         val = builder()
-        _CACHE[full] = val
-        # drop entries from dead contexts so the dict stays bounded
-        live = full[0]
-        for stale in [k for k in _CACHE if k[0] != live]:
-            del _CACHE[stale]
+        if len(memo) >= _CACHE_MAX:
+            memo.clear()  # simplest bound, as quantize._CENTROID_CACHE
+        memo[key] = val
     return val

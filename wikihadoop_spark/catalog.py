@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ._exprs import owned_memo
 from .session import configure_session
 
 TABLE_NAMES = (
@@ -44,27 +45,19 @@ BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"
 # The stat key invalidates the entry whenever the file is rewritten.
 _SCHEMA_CACHE: dict[tuple, T.StructType] = {}
 
-# (context identity, id(session), path, mtime_ns, size) -> the built
-# scan DataFrame (round-18).  Even with the schema cache, every
-# ``read.parquet`` call re-creates the reader and the file index in
-# the JVM (~30 ms per table per query build — q5 loads five tables).
-# A DataFrame is an immutable logical plan, so returning the SAME
-# object on a repeat load is plan-construction memoization in the
+# Scan-frame memo: (path, mtime_ns, size) -> the built scan DataFrame
+# (round-18), in a dict on the SparkSession object.  Even with the schema
+# cache, every ``read.parquet`` call re-creates the reader and the file
+# index in the JVM (~30 ms per table per query build — q5 loads five
+# tables).  A DataFrame is an immutable logical plan, so returning the
+# SAME object on a repeat load is plan-construction memoization in the
 # round-17 class (expression Columns, schemas, partition counts):
 # plans, values, and results are identical; every action still
 # re-executes the full scan.
-# Keyed by the stable context identity (a restarted JVM must rebuild —
-# the plan holds gateway references) and the session (a frame runs
-# under its session's conf; the cached frame holds that session, so
-# its id() cannot be reused while the entry lives), and invalidated by
-# the stat key on any file rewrite.  Regular files only, same as
-# _SCHEMA_CACHE.
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _evict_dead_context_tables(ctx: tuple) -> None:
-    for stale in [k for k in _TABLE_CACHE if k[0] != ctx]:
-        del _TABLE_CACHE[stale]
+# A frame runs under its session's conf; a ``newSession()`` or a
+# restarted context is a new object that starts empty, and a dropped
+# session's frames die with it.  The stat key invalidates an entry on
+# any file rewrite.  Regular files only, same as _SCHEMA_CACHE.
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -85,12 +78,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             key = (path, st.st_mtime_ns, st.st_size)
     except OSError:
         pass  # globs/remote paths: fall through to plain inference
-    ctx = None
+    frames = owned_memo(spark, "_wikihadoop_scan_frames")
     if key is not None:
-        from ._exprs import _ctx_id
-
-        ctx = _ctx_id()
-        cached = _TABLE_CACHE.get((ctx, id(spark), *key))
+        cached = frames.get(key)
         if cached is not None:
             return cached
     if key is not None and key in _SCHEMA_CACHE:
@@ -113,8 +103,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # parallelism is deterministic, so one exact probe per table
         # replaces a plan-to-RDD conversion on every query build
         df._wikihadoop_scan_stat = key
-        _evict_dead_context_tables(ctx)
-        _TABLE_CACHE[(ctx, id(spark), *key)] = df
+        frames[key] = df
     return df
 
 

@@ -31,13 +31,16 @@ Engine-parity conventions (why the code looks the way it does):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import Tables
+from ._exprs import cached_exprs as _cached_exprs
+from ._exprs import owned_memo
+from .catalog import _SCHEMA_CACHE, Tables
 from .operators.asof import asof_join
 from .operators.dedup import (
     MERSENNE31,
@@ -68,35 +71,39 @@ _SCAN_PARTS_CACHE: dict[tuple, int] = {}
 # whole query plans): for a query whose build is PURE PLAN ASSEMBLY,
 # the returned DataFrame is an immutable logical plan over the catalog
 # tables, fully determined by (query name, sf_dir contents), so a
-# repeat invocation can return the SAME object — a prepared-statement
-# cache, exactly like plan caches in server databases.  Every ACTION
-# on the frame still executes the full job from the parquet inputs:
-# nothing row- or result-shaped is stored, and plans/values are
-# byte-identical to a fresh build.
+# repeat invocation can reuse it — a prepared-statement cache, exactly
+# like plan caches in server databases.  Every ACTION still executes
+# the full job from the parquet inputs: nothing row- or result-shaped
+# is stored, and plans/values are byte-identical to a fresh build.
 #
-# Eligibility is deliberately narrow and machine-verified
-# (tests/test_prepared_plans.py drills every name): a query is in
-# `_PURE_PLAN_QUERIES` only if, with warm table schemas, its build
-# (a) runs ZERO Spark jobs — memoizing a build that trains/iterates
-#     (IVF k-means, connected components, pack boundaries, Bloom
-#     builds) would skip real recomputation, which is result caching;
-# (b) leaves NO persisted relation in the optimized plan — a memoized
-#     frame marked for caching would serve CacheManager data across
-#     invocations (the round-17 verdict's unpersist-discipline trap);
-# (c) scans ONLY the ten catalog tables under sf_dir — the memo key's
-#     stat tuple must cover every input that could change.
-# A build whose plan reads a relation by name (``spark.sql`` over temp
-# views) is never stored: checked once per key on the miss path.
-# The key carries the stable context identity (a restarted JVM must
-# rebuild: plans hold gateway references), the session (its scans run
-# under its conf) and the (mtime_ns, size) stat of every catalog
-# table, so any rewrite of the inputs invalidates the entry;
-# non-regular / missing table files disable the memo entirely for
-# that sf_dir.
-_PREPARED_CACHE: dict[tuple, DataFrame] = {}
+# Eligibility is derived, not listed: `_pure_plan` judges the first
+# build of each key once, and the verdict, negative too, is stored.
+# A build is memoized only if
+# (a) it launched ZERO Spark jobs (the DAG scheduler's next job id did
+#     not move) — a build that trains/iterates (IVF k-means, connected
+#     components, pack boundaries, Bloom builds) computes from the
+#     data, and reusing it would be result caching;
+# (b) every leaf of its cached-data plan, subqueries included, is a
+#     scan of the ten catalog tables under sf_dir or a LocalRelation,
+#     OneRowRelation or Range — so no persisted relation, no
+#     LogicalRDD (``read_wikidump``'s seed) and no other input the key
+#     does not cover;
+# (c) its parsed plan reads no relation by name: an
+#     ``UnresolvedRelation`` (``spark.sql`` over temp views) resolves
+#     against whatever views are registered when it is analyzed.
+# A build that inferred a table's parquet schema ran that inference
+# job itself, so it is not judged; the next build of its key is.
+# Without the JVM hooks (AttributeError/Py4JError) nothing is memoized.
+# The memo is a dict on the SparkSession object (its scans run under
+# its conf; a ``newSession()`` or a restarted context is a new object
+# that starts empty, and a dropped session's entries die with it).  It
+# maps a key to the first build's JVM logical plan, or to None, and is
+# keyed on the query name, sf_dir and the (mtime_ns, size) stat of
+# every catalog table, so any rewrite of the inputs misses; non-regular
+# or missing table files disable the memo for that sf_dir.
 
 
-def _prepared_key(spark: SparkSession, sf_dir: str, name: str) -> tuple | None:
+def _prepared_key(sf_dir: str, name: str) -> tuple | None:
     import os as _os
     import stat as _stat
 
@@ -112,135 +119,110 @@ def _prepared_key(spark: SparkSession, sf_dir: str, name: str) -> tuple | None:
             stats.append((st.st_mtime_ns, st.st_size))
     except OSError:
         return None
-    from ._exprs import _ctx_id
-
-    # a cached frame holds its session, so id(spark) cannot be reused
-    # while the entry lives
-    return (_ctx_id(), name, sfd, tuple(stats), id(spark))
+    return (name, sfd, tuple(stats))
 
 
-def _memoizable(df: DataFrame) -> bool:
-    """False when the plan, or a subquery in it, has an
-    ``UnresolvedRelation`` leaf (``spark.sql`` over temp views), or has
-    no JVM plan to inspect.  Such a leaf resolves against the session's
-    CURRENT views on every analysis, so a memoized plan would read
-    whatever sf_dir the views were last registered from, not the one in
-    its key."""
+def _next_job_id(spark: SparkSession) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _leaves(plan):
+    """The leaves of a JVM logical plan and of every subquery in it."""
+    plans = [plan]
+    subqueries = plan.subqueriesAll().iterator()
+    while subqueries.hasNext():
+        plans.append(subqueries.next())
+    for p in plans:
+        leaves = p.collectLeaves().iterator()
+        while leaves.hasNext():
+            yield leaves.next()
+
+
+def _pure_plan(spark: SparkSession, df: DataFrame, sfd: str, jobs0: int) -> bool:
+    """Whether a first build that started at job id ``jobs0`` meets the
+    memo's rule (a)-(c) above."""
+    import os as _os
+    from urllib.parse import unquote, urlparse
+
+    from .catalog import TABLE_NAMES
+
+    catalog = {
+        _os.path.realpath(_os.path.join(sfd, f"{t}.parquet")) for t in TABLE_NAMES
+    }
     try:
-        plan = df._jdf.queryExecution().logical()
-        plans = [plan]
-        subqueries = plan.subqueriesAll().iterator()
-        while subqueries.hasNext():
-            plans.append(subqueries.next())
-        for p in plans:
-            leaves = p.collectLeaves().iterator()
-            while leaves.hasNext():
-                if leaves.next().nodeName() == "UnresolvedRelation":
+        if _next_job_id(spark) != jobs0:
+            return False
+        qe = df._jdf.queryExecution()
+        parsed = _leaves(qe.logical())
+        if any(leaf.nodeName() == "UnresolvedRelation" for leaf in parsed):
+            return False
+        for leaf in _leaves(qe.withCachedData()):
+            kind = leaf.nodeName()
+            if kind == "LogicalRelation":
+                files = leaf.relation().inputFiles()
+                if any(
+                    _os.path.realpath(unquote(urlparse(f).path)) not in catalog
+                    for f in files
+                ):
                     return False
+            elif kind not in ("LocalRelation", "OneRowRelation", "Range"):
+                return False
     except (AttributeError, Py4JError):
         return False
     return True
 
 
-def _evict_dead_context_prepared(ctx: tuple) -> None:
-    for stale in [k for k in _PREPARED_CACHE if k[0] != ctx]:
-        del _PREPARED_CACHE[stale]
-
-
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
-        if name in _PURE_PLAN_QUERIES:
-            import functools
-
-            @functools.wraps(fn)
-            def prepared(spark: SparkSession, sf_dir: str) -> DataFrame:
-                key = _prepared_key(spark, sf_dir, name)
-                if key is None:
-                    return fn(spark, sf_dir)
-                cached = _PREPARED_CACHE.get(key)
-                if cached is None:
-                    df = fn(spark, sf_dir)
-                    if _memoizable(df):
-                        _evict_dead_context_prepared(key[0])
-                        _PREPARED_CACHE[key] = df
-                    return df
-                # keep the configure_session contract (UTC re-assert)
-                # that a fresh build would have run
-                from .session import configure_session
-
-                configure_session(spark)
-                # Hand back the memoized LOGICAL plan under a FRESH
-                # Dataset (ofRows): a Dataset pins its QueryExecution —
-                # analysis/optimization/physical planning — at first
-                # use, so returning the cached Dataset itself would
-                # freeze conf-dependent physical choices (shuffle
-                # partitions, AQE, broadcast thresholds) at whatever
-                # the session looked like on the FIRST invocation.
-                # Re-wrapping replans against the CALLER's current
-                # session every time; only the py4j plan-assembly
-                # chain (the expensive part) is amortized.
+        @functools.wraps(fn)
+        def prepared(spark: SparkSession, sf_dir: str) -> DataFrame:
+            key = _prepared_key(sf_dir, name)
+            if key is None:
+                return fn(spark, sf_dir)
+            memo = owned_memo(spark, "_wikihadoop_prepared_plans")
+            if key not in memo:
+                inferred = len(_SCHEMA_CACHE)
                 try:
-                    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-                        spark._jsparkSession,
-                        cached._jdf.queryExecution().logical(),
-                    )
-                except (AttributeError, Py4JError):  # no classic Dataset here
-                    return fn(spark, sf_dir)
-                return DataFrame(jdf, spark)
+                    jobs0 = _next_job_id(spark)
+                except (AttributeError, Py4JError):
+                    jobs0 = None
+                df = fn(spark, sf_dir)
+                if len(_SCHEMA_CACHE) == inferred:  # else judge the next build
+                    pure = jobs0 is not None and _pure_plan(spark, df, key[1], jobs0)
+                    memo[key] = df._jdf.queryExecution().logical() if pure else None
+                return df
+            plan = memo[key]
+            if plan is None:
+                return fn(spark, sf_dir)
+            # keep the configure_session contract (UTC re-assert)
+            # that a fresh build would have run
+            from .session import configure_session
 
-            QUERIES[name] = prepared
-        else:
-            QUERIES[name] = fn
+            configure_session(spark)
+            # Hand back the memoized LOGICAL plan under a FRESH
+            # Dataset (ofRows): a Dataset pins its QueryExecution —
+            # analysis/optimization/physical planning — at first
+            # use, so returning the first build's Dataset would
+            # freeze conf-dependent physical choices (shuffle
+            # partitions, AQE, broadcast thresholds) at whatever
+            # the session looked like on the FIRST invocation.
+            # Re-wrapping replans against the CALLER's current
+            # session every time; only the py4j plan-assembly
+            # chain (the expensive part) is amortized.
+            try:
+                jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+                    spark._jsparkSession, plan
+                )
+            except (AttributeError, Py4JError):  # no classic Dataset here
+                return fn(spark, sf_dir)
+            return DataFrame(jdf, spark)
+
+        QUERIES[name] = prepared
         if oracle is not None:
             ORACLE[name] = oracle
         return fn
 
     return deco
-
-
-# Machine-verified membership (see the drill in
-# tests/test_prepared_plans.py, which rejects any name that runs a
-# build job, persists, or scans outside the catalog tables — and any
-# NEW query added here without passing that drill).  Notable
-# exclusions and why: the IVF family (training/artifact jobs),
-# dedup_clusters / semantic_dedup / dedup_keeper_quality /
-# dedup_verify_pairs / text_lm_buckets / curate_pipeline (connected
-# components or other convergence jobs during build),
-# similarity_topk_int8{,_lsh} / text_lm_{surprisal,bigram} /
-# dsir_weights / embedding_cosine_dedup_int8 (persisted model or
-# corpus frames), pack_token_budget / shuffle_pack / mixture_waterfill
-# / sample_mixture (range-boundary or budget scans), decontaminate_bloom
-# (Bloom build), ngram_overlap (localCheckpoint), jsonl_* (reads
-# regenerated /tmp shard fixtures).
-_PURE_PLAN_QUERIES: frozenset[str] = frozenset({
-    "agg_approx_distinct", "agg_argmax", "agg_cube", "agg_distinct",
-    "agg_grouping_sets", "agg_percentile", "agg_rollup", "agg_stats",
-    "asof_join_events_orders", "chunk_documents", "corpus_delta",
-    "corpus_report_card", "correlated_exists", "decontaminate_exact",
-    "decontaminate_ngram", "decontaminate_report", "dedup_exact_rows",
-    "dedup_line_frequency", "dedup_span_audit", "dedup_span_exact",
-    "embedding_cosine_dedup", "events_funnel", "events_funnel_skewsafe",
-    "events_pivot", "events_retention", "events_sliding",
-    "events_tumbling", "filter_regex", "join_anti", "join_cross",
-    "join_full_outer", "join_inner_agg", "join_left_agg",
-    "join_right_agg", "join_semi", "join_theta", "media_audio_features",
-    "media_frame_fanout", "media_image_metadata", "minhash_lsh_pairs",
-    "minhash_signatures", "ngram_jaccard_block", "q1_pricing_summary",
-    "q3_top_revenue", "q5_revenue_by_nation", "range_join_near_orders",
-    "sample_stratified", "scalar_array", "scalar_conditional",
-    "scalar_date", "scalar_hash", "scalar_json", "scalar_math",
-    "scalar_string", "scalar_subquery", "scan_filter_project",
-    "sessionize_events", "set_except", "set_intersect", "set_union_all",
-    "simhash_near_pairs", "simhash_signatures", "similarity_topk",
-    "similarity_topk_lsh", "sketch_count_min", "sort_topk_global",
-    "text_c4_clean", "text_diff_adjacent", "text_fingerprint",
-    "text_langid", "text_quality", "text_quality_model",
-    "text_repetition", "text_scrub_pii", "text_stopword_strip",
-    "text_tfidf_topk", "text_tokens", "unpivot_lineitem",
-    "wikidump_pairs_join", "wikidump_roundtrip", "wikidump_roundtrip_bz2",
-    "window_distribution", "window_lag_pairs", "window_moving",
-    "window_rank_topk", "window_running", "window_value_functions",
-})
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -291,7 +273,6 @@ def _spread(df: DataFrame) -> DataFrame:
 # each Column construction is 2-3 py4j round trips; the returned
 # unresolved ASTs are immutable and reused across plans exactly like
 # the round-17 operator memoizations — plans and results unchanged.
-from ._exprs import cached_exprs as _cached_exprs  # noqa: E402
 
 
 def dec2(c: str) -> Column:
