@@ -132,6 +132,56 @@ def big_dump(n_pages: int = 40, revs_per_page: int = 6) -> str:
     )
 
 
+def namespace_dump() -> str:
+    """Title normalization and metadata edge cases, pages in page-id
+    order: talk and user-talk prefixes, an unknown ns, a title equal to
+    its prefix, titles with no colon or a leading one, a ns-0 title
+    with a prefix, an empty <ns>, non-ascii titles, a null timestamp,
+    deleted, anonymous and quoted contributors."""
+    pages = [
+        (1, "Talk:Fox Article", 1),
+        (2, "User talk:Editor/Archive 1", 3),
+        (3, "Topic:Unknown space", 2600),
+        (4, "Talk", 1),
+        (5, "User talk", 3),
+        (6, "Wikipedia", 4),
+        (7, "NoColonAtAll", 10),
+        (8, ":Leading colon", 1),
+        (9, "Talk:Not stripped in main", 0),
+        (10, "Empty ns:Page", ""),
+        (11, "Talk:Caf\u00e9 \u00fcber \u65e5\u672c", 1),
+        (12, "Category talk:It's \"quoted\"", 15),
+        (13, "Special:Random", -1),
+        (14, "Book talk:", 109),
+    ]
+    rid = 7000
+    out = []
+    for pid, title, ns in pages:
+        revs = []
+        body = f"Body of {pid} with [[link]] &amp; {{{{tmpl}}}}"
+        for r in range(3):
+            rid += 1
+            body += f" edit {r} \u00e9"
+            revs.append(rev(
+                rid,
+                "" if (pid, r) == (3, 1) else f"2020-0{r + 1}-1{pid % 10}T0{r}:3{r}:0{pid % 10}Z",
+                body,
+                deleted_user=(pid, r) == (2, 2),
+                ip="192.0.2.1" if (pid, r) == (4, 1) else None,
+                user="O'Neil \"Q\"",
+                uid=pid,
+                comment=None if r == 0 else f"c{r} caf\u00e9",
+                minor=r == 2,
+                parent=rid - 1 if r else None,
+            ))
+        out.append(page(pid, title.replace("&", "&amp;").replace('"', "&quot;"), ns, revs))
+    return (
+        "<mediawiki>\n  <siteinfo><sitename>N</sitename></siteinfo>\n"
+        + "".join(out)
+        + "</mediawiki>\n"
+    )
+
+
 def write_dump(tmp_path, content: str, name: str = "dump.xml", compress: str | None = None) -> str:
     p = tmp_path / name
     if compress == "bz2":

@@ -154,21 +154,19 @@ def test_media_metadata_prunes_documents_scan(spark):
 
 
 def test_in_source_diff_no_second_python_stage(spark, tmp_path):
-    """The default read_wikidump -> build_diffdb plan pairs and diffs
-    inside the scan: ops come off the scan's one MapInArrow (no
-    DataSource BatchScan), so there is no Window (the pairing shuffle)
-    and no BroadcastExchange (the namespace join), and the only Python
-    eval is the TSV formatter at the sink."""
-    from wikihadoop_spark.plans.diffdb import build_diffdb, diffdb_tsv_lines
+    """The sink's general path (a frame the scan tasks cannot write)
+    over read_wikidump -> build_diffdb pairs and diffs inside the scan:
+    ops come off the scan's one MapInArrow (no DataSource BatchScan),
+    so there is no Window (the pairing shuffle) and no
+    BroadcastExchange (the namespace join), and the only Python eval
+    is the TSV formatter after the dedup and the sort."""
+    from wikihadoop_spark.plans.diffdb import build_diffdb, sorted_tsv_lines
     from wikihadoop_spark.sources.wikidump import read_wikidump
 
     from dump_fixtures import standard_dump, write_dump
 
     path = write_dump(tmp_path, standard_dump())
-    diffdb = build_diffdb(read_wikidump(spark, path))
-    sink = diffdb_tsv_lines(
-        diffdb.dropDuplicates(["rev_id"]).orderBy("page_id", "rev_id")
-    )
+    sink, _ = sorted_tsv_lines(build_diffdb(read_wikidump(spark, path)))
     plan = sink._jdf.queryExecution().executedPlan().toString()
     assert "BatchScan wikidump" not in plan
     assert "Window" not in plan
@@ -181,6 +179,26 @@ def test_in_source_diff_no_second_python_stage(spark, tmp_path):
     assert not any("Exchange" in l for l in lines[i + 1 :]), plan
     evals = [l for l in lines if "EvalPython" in l]
     assert len(evals) == 1 and "fmt(" in evals[0], evals
+    assert "rangepartitioning(page_id" in plan
+
+
+def test_diffdb_task_sink_is_one_map_in_arrow(spark, tmp_path):
+    """The sink's task path is one MapInArrow straight over the seed of
+    partition ids: it pairs, diffs, formats and writes in one Python
+    pass, so no Exchange, no Sort and no EvalPython run."""
+    from wikihadoop_spark.plans.diffdb import write_scan_parts
+    from wikihadoop_spark.sources.wikidump import read_wikidump
+
+    from dump_fixtures import big_dump, write_dump
+
+    path = write_dump(tmp_path, big_dump(n_pages=50, revs_per_page=3))
+    scan = read_wikidump(spark, path, splitsize="4096")._wikidump_scan
+    job = write_scan_parts(spark, scan, str(tmp_path / "staging"), True)
+    lines = job._jdf.queryExecution().executedPlan().toString().strip().splitlines()
+    assert len(lines) == 2, lines
+    assert lines[0].startswith("MapInArrow write(id#")
+    assert "Scan ExistingRDD[id#" in lines[1]
+    assert job.rdd.getNumPartitions() == len(scan.parts) > 1
 
 
 def test_wikidump_scan_size_is_not_tiny(spark, tmp_path):

@@ -205,6 +205,28 @@ def test_table_rewrite_invalidates_prepared_plan(spark, tmp_path):
     assert len(keys() - keys1) == 1  # a second, distinct entry
 
 
+def test_rewritten_tables_keep_stat_caches_bounded(spark, tmp_path, monkeypatch):
+    """Every rewrite of a table file adds a stat key to the schema and
+    scan-partition caches: past their cap they empty instead of
+    growing, and a build that inferred a schema across the clear is
+    still seen as one (the prepared memo does not judge it)."""
+    from wikihadoop_spark import catalog
+
+    monkeypatch.setattr(catalog, "_SCHEMA_CACHE_MAX", 2)
+    monkeypatch.setattr(relational, "_SCAN_PARTS_CACHE_MAX", 2)
+    sfd = tmp_path / "sf"
+    sfd.mkdir()
+    shutil.copyfile(f"{SF}/documents.parquet", sfd / "documents.parquet")
+    docs = sfd / "documents.parquet"
+    for i in range(5):
+        os.utime(docs, ns=(os.stat(docs).st_mtime_ns + 1,) * 2)
+        before = catalog.schema_inferences()
+        relational._spread(load_table(spark, str(sfd), "documents"))
+        assert catalog.schema_inferences() == before + 1
+        assert len(catalog._SCHEMA_CACHE) <= 2
+        assert len(relational._SCAN_PARTS_CACHE) <= 2
+
+
 def test_memo_entries_die_with_their_context():
     """Every memo lives on the object that owns it: a restarted session
     (new context, same process) starts with empty plan, scan-frame and

@@ -3,7 +3,7 @@ invocation (README.rst:217-219 / fileformat.rst:37):
 
   python -m wikihadoop_spark diffdb --input dump.xml[.bz2] --output out/ \
       [--exclude-pages-with REGEX] [--split-size BYTES] [--cores N] \
-      [--no-sort] [--no-dedup] [--compression gzip]
+      [--compression gzip]
 
   python -m wikihadoop_spark revisions --input dump.xml --output out/  # parquet revisions table
 
@@ -39,8 +39,6 @@ def main(argv: list[str] | None = None) -> int:
     common.add_argument("--cores", type=int, default=None)
 
     d = sub.add_parser("diffdb", parents=[common], help="full diff pipeline -> TSV")
-    d.add_argument("--no-sort", action="store_true")
-    d.add_argument("--no-dedup", action="store_true")
     d.add_argument("--compression", default="gzip")
 
     sub.add_parser("revisions", parents=[common], help="typed revisions -> parquet")
@@ -522,14 +520,13 @@ def main(argv: list[str] | None = None) -> int:
             return 0
 
         diff = build_diffdb(revs, exclude_pages_with=args.exclude_pages_with)
-        write_diffdb_tsv(
-            diff,
-            args.output,
-            sort=not args.no_sort,
-            dedup=not args.no_dedup,
-            compression=args.compression or None,
+        counts = write_diffdb_tsv(
+            diff, args.output, compression=args.compression or None
         )
-        print(f"diffdb written -> {args.output}")
+        print(
+            f"diffdb written: {counts['written_revisions']} revisions of"
+            f" {counts['written_pages']} pages ({counts['path']}) -> {args.output}"
+        )
         return 0
     finally:
         spark.stop()

@@ -42,8 +42,18 @@ BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"
 # inference reads file footers on the DRIVER on every ``read.parquet``
 # call; the catalog re-reads the same static tables on every query
 # build, so the footer cost is pure per-invocation latency (round-17).
-# The stat key invalidates the entry whenever the file is rewritten.
+# The stat key invalidates the entry whenever the file is rewritten;
+# the dict empties at _SCHEMA_CACHE_MAX keys, so rewritten files'
+# stale keys cannot pile up (a catalog scale holds ten tables).
 _SCHEMA_CACHE: dict[tuple, T.StructType] = {}
+_SCHEMA_CACHE_MAX = 64
+_schema_inferences = 0
+
+
+def schema_inferences() -> int:
+    """How many schemas ``load_table`` has inferred into the cache:
+    monotonic, so a clear of the cache never reads as "none ran"."""
+    return _schema_inferences
 
 # Scan-frame memo: (path, mtime_ns, size) -> the built scan DataFrame
 # (round-18), in a dict on the SparkSession object.  Even with the schema
@@ -61,6 +71,7 @@ _SCHEMA_CACHE: dict[tuple, T.StructType] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    global _schema_inferences
     configure_session(spark)
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
     key = None
@@ -88,6 +99,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     else:
         df = spark.read.parquet(path)
         if key is not None:
+            _schema_inferences += 1
+            if len(_SCHEMA_CACHE) >= _SCHEMA_CACHE_MAX:
+                _SCHEMA_CACHE.clear()  # small values; simplest bound
             _SCHEMA_CACHE[key] = df.schema
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         # int64 nanos -> timestamp_ntz micros (identical to DuckDB's value)

@@ -2,6 +2,6 @@
 text statistics, python2-repr compatibility encoding."""
 
 from .tokenize import tokenize_wikitext
-from .diffs import token_diff, apply_diff, diff_ops_udf
+from .diffs import token_diff, apply_diff
 
-__all__ = ["tokenize_wikitext", "token_diff", "apply_diff", "diff_ops_udf"]
+__all__ = ["tokenize_wikitext", "token_diff", "apply_diff"]

@@ -479,51 +479,6 @@ def diff_check_udf():
     )
 
 
-def diff_ops_udf():
-    """Arrow-vectorized pandas UDF: (prev_text, text) ->
-    array<struct<position:bigint, action:int, content:string>>.
-
-    The diff itself is inherently sequential Python per pair; the win
-    over row-at-a-time UDFs is Arrow batch transfer + no per-row
-    pickling (SURVEY §4 strategy #9's pypy JIT replaced by
-    vectorized transport)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    def _diff(prev, curr):
-        # cyclic GC off for the batch: tokenization allocates millions
-        # of acyclic objects (strings/lists/tuples), and gen2 sweeps
-        # triggered mid-batch showed up as multi-second stalls on some
-        # runs; refcounting frees everything here
-        import gc
-
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-        # No tokenize memo (an earlier version cached row i's token
-        # list for reuse as row i+1's prev): token_diff char-strips
-        # each PAIR to its edit region before tokenizing, so the
-        # strings reaching the tokenizer are pair-dependent and a
-        # text-keyed cache essentially never hits — it was dict upkeep
-        # plus up to 4M pinned tokens of dead substrings per batch.
-        try:
-            return pd.Series(
-                [
-                    list(token_diff(p or "", c or ""))
-                    for p, c in zip(prev.tolist(), curr.tolist())
-                ]
-            )
-        finally:
-            if gc_was_enabled:
-                gc.enable()
-
-    # real class objects (PEP-563 string hints break pandas-UDF
-    # signature inference under `from __future__ import annotations`)
-    _diff.__annotations__ = {"prev": pd.Series, "curr": pd.Series, "return": pd.Series}
-    return F.pandas_udf(
-        _diff, "array<struct<position:bigint, action:int, content:string>>"
-    )
-
-
 def ops_check_udf():
     """Arrow-vectorized pandas UDF: (prev_text, text, ops) ->
     struct<roundtrip_ok:boolean, empty_iff_equal:boolean>.

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from ._exprs import cached_exprs as _cached_exprs
 from ._exprs import owned_memo
-from .catalog import _SCHEMA_CACHE, Tables
+from .catalog import Tables, schema_inferences
 from .operators.asof import asof_join
 from .operators.dedup import (
     MERSENNE31,
@@ -61,8 +61,10 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 
 # (table stat key, defaultParallelism) -> scan partition count; see
-# _spread (round-17: one exact probe per table instead of per build)
+# _spread (round-17: one exact probe per table instead of per build).
+# Emptied at _SCAN_PARTS_CACHE_MAX keys, as catalog._SCHEMA_CACHE.
 _SCAN_PARTS_CACHE: dict[tuple, int] = {}
+_SCAN_PARTS_CACHE_MAX = 64
 
 # ---- prepared-plan memo (round-18) ----------------------------------------
 #
@@ -181,13 +183,13 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
                 return fn(spark, sf_dir)
             memo = owned_memo(spark, "_wikihadoop_prepared_plans")
             if key not in memo:
-                inferred = len(_SCHEMA_CACHE)
+                inferred = schema_inferences()
                 try:
                     jobs0 = _next_job_id(spark)
                 except (AttributeError, Py4JError):
                     jobs0 = None
                 df = fn(spark, sf_dir)
-                if len(_SCHEMA_CACHE) == inferred:  # else judge the next build
+                if schema_inferences() == inferred:  # else judge the next build
                     pure = jobs0 is not None and _pure_plan(spark, df, key[1], jobs0)
                     memo[key] = df._jdf.queryExecution().logical() if pure else None
                 return df
@@ -257,6 +259,8 @@ def _spread(df: DataFrame) -> DataFrame:
         nparts = _SCAN_PARTS_CACHE.get(ckey)
         if nparts is None:
             nparts = df.rdd.getNumPartitions()
+            if len(_SCAN_PARTS_CACHE) >= _SCAN_PARTS_CACHE_MAX:
+                _SCAN_PARTS_CACHE.clear()
             _SCAN_PARTS_CACHE[ckey] = nparts
     else:
         nparts = df.rdd.getNumPartitions()

@@ -413,12 +413,11 @@ class WikidumpReader(DataSourceReader):
 
     # -- execution ----------------------------------------------------------
 
-    def read(self, partition: WikidumpPartition):
-        """Yields Arrow RecordBatches — row tuples would be pickled one
-        by one across the Python<->JVM boundary; batching through Arrow
-        is the difference between ~1 MB/s and tens of MB/s."""
-        import pyarrow as pa
-
+    def rows(self, partition: WikidumpPartition) -> Iterator[dict]:
+        """The partition's revisions as dicts, in dump order: every
+        base column, each revision paired with its predecessor, and its
+        ``ops`` when the schema asks for them.  ``read`` batches these
+        rows for Spark; the diffdb task writer formats them directly."""
         fields = [f.name for f in self._full_schema.fields]
         # the token diff runs in the scan (the reference's in-mapper
         # shape) only when ops is asked for; it needs the texts even
@@ -464,20 +463,6 @@ class WikidumpReader(DataSourceReader):
             scanner = _TagScanner(f, base_offset=0)
             end_fn = lambda: partition.end  # noqa: E731
 
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        schema = to_arrow_schema(self._full_schema)
-
-        def batch() -> pa.RecordBatch:
-            return pa.RecordBatch.from_arrays(
-                [pa.array([r.get(f.name) for r in batch_rows], type=f.type) for f in schema],
-                schema=schema,
-            )
-
-        batch_rows, batch_bytes = [], 0
-        # flush on row count or accumulated text size — bounds task memory
-        max_rows, max_bytes = 2048, 32 << 20
-
         if compute_ops:
             from wikihadoop_spark.functions.diffs import token_diff
 
@@ -507,18 +492,39 @@ class WikidumpReader(DataSourceReader):
                             row.get("text") or "",
                         )
                     )
-                batch_rows.append(row)
-                t = row.get("text")
-                batch_bytes += len(t) if t else 64
-                if len(batch_rows) >= max_rows or batch_bytes >= max_bytes:
-                    yield batch()
-                    batch_rows, batch_bytes = [], 0
-            if batch_rows:
-                yield batch()
+                yield row
         finally:
             if gc_was_enabled:
                 gc.enable()
             f.close()
+
+    def read(self, partition: WikidumpPartition):
+        """Yields Arrow RecordBatches — row tuples would be pickled one
+        by one across the Python<->JVM boundary; batching through Arrow
+        is the difference between ~1 MB/s and tens of MB/s."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = to_arrow_schema(self._full_schema)
+
+        def batch() -> pa.RecordBatch:
+            return pa.RecordBatch.from_arrays(
+                [pa.array([r.get(f.name) for r in batch_rows], type=f.type) for f in schema],
+                schema=schema,
+            )
+
+        batch_rows, batch_bytes = [], 0
+        # flush on row count or accumulated text size — bounds task memory
+        max_rows, max_bytes = 2048, 32 << 20
+        for row in self.rows(partition):
+            batch_rows.append(row)
+            t = row.get("text")
+            batch_bytes += len(t) if t else 64
+            if len(batch_rows) >= max_rows or batch_bytes >= max_bytes:
+                yield batch()
+                batch_rows, batch_bytes = [], 0
+        if batch_rows:
+            yield batch()
 
     def _read_pages(self, scanner, end_fn, want_text, exclude):
         while True:
@@ -701,6 +707,25 @@ def register_wikidump(spark: "SparkSession") -> None:
     spark.dataSource.register(WikidumpDataSource)
 
 
+def partition_seed(spark: "SparkSession", n: int) -> "DataFrame":
+    """A frame of ``n`` partitions holding one id each, ``0..n-1``: the
+    seed a per-partition ``mapInArrow`` task runs over.  It is a
+    ``LogicalRDD``, whose size the optimizer treats as unknown, so a
+    dump read over it is never taken for a broadcastable table."""
+    from pyspark.sql import DataFrame
+
+    ids = spark.range(n, numPartitions=n)._jdf.toDF()
+    return DataFrame(spark._jsparkSession.createDataFrame(ids.javaRDD(), ids.schema()), spark)
+
+
+@dataclass(frozen=True)
+class WikidumpScan:
+    """A planned read: the reader and its partitions, in file order."""
+
+    reader: WikidumpReader
+    parts: list[WikidumpPartition]
+
+
 def read_wikidump(
     spark: "SparkSession", path: str, schema: str = SCHEMA_DDL, **options
 ) -> "DataFrame":
@@ -710,12 +735,14 @@ def read_wikidump(
     ``spark.read.format("wikidump")``.
 
     Partitions are planned here, on the driver, and each task reads one
-    with ``WikidumpReader.read`` under ``mapInArrow``: the Python
-    DataSource API would start two planner processes per query first.
-    The seed carries one partition id per partition; it is a
-    ``LogicalRDD``, whose size the optimizer treats as unknown, so the
-    dump is never taken for a broadcastable table."""
-    from pyspark.sql import DataFrame
+    with ``WikidumpReader.read`` under ``mapInArrow`` over a
+    ``partition_seed``: the Python DataSource API would start two
+    planner processes per query first.
+
+    When the scan diffs (``ops`` is in the schema), the returned frame
+    carries its ``WikidumpScan`` as ``_wikidump_scan``, so the diffdb
+    sink can run the same partitions itself (``plans/diffdb.py``).  A
+    transformed frame is a new object and does not carry it."""
     from pyspark.sql.utils import to_str
 
     struct = StructType.fromDDL(schema)
@@ -730,6 +757,7 @@ def read_wikidump(
             for i in b.column(0).to_pylist():
                 yield from reader.read(parts[i])
 
-    ids = spark.range(len(parts), numPartitions=len(parts))._jdf.toDF()
-    seed = spark._jsparkSession.createDataFrame(ids.javaRDD(), ids.schema())
-    return DataFrame(seed, spark).mapInArrow(read, struct)
+    df = partition_seed(spark, len(parts)).mapInArrow(read, struct)
+    if "ops" in struct.fieldNames():
+        df._wikidump_scan = WikidumpScan(reader, parts)
+    return df
