@@ -1,26 +1,34 @@
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], the diffdb job over
+three synthetic dumps, and at sf0.1 the pipeline extras and an sf1
+spot check.
 
 Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", ..., "queries": {...}}
+  {"metric": "...", "unit": "sec", ..., "queries": {...}}
 
-Durability (round-7 verdict): the driver records only the LAST 2000
-characters of the printed line, and round 7's full line outgrew that —
-the artifact lost the first 9 headline timings.  So the FULL result
-(headline timings + spreads + pipeline extras + wikidump + sf1 spot)
-is also written to BENCH_SELF.json in the repo root (committed each
-round; $SPARK_GRAFT_BENCH_SELF overrides the path for tests), and the
-printed line is a compact subset ordered so the headline ``queries``
-dict comes LAST — whatever a bounded tail capture drops, it drops the
-least important keys first.
+The driver keeps only the LAST 2000 characters of the line, so the line
+is a compact subset ordered with the headline ``queries`` dict LAST, and
+the FULL result (spreads, pipeline extras, sf1 spot) is written to
+BENCH_SELF.json in the repo root ($SPARK_GRAFT_BENCH_SELF overrides the
+path; ``--no-artifact`` writes it to a temporary file instead).
 
-Each query is timed end-to-end (plan + execute + collect-to-count); a
-warmup pass on sf0.001 first touches code paths so JIT/codegen cost
-doesn't land on query 1.
+One timing rule (``_timed_runs``): after an untimed warm-up, every row
+is the minimum of three runs, each behind a prewarm, plus up to
+_STALL_EXTRA_RUNS more while no second run confirms the minimum.  Query
+rows compute their full output into a noop sink (``_full``); dump rows
+write the diffdb TSV with ``write_diffdb_tsv``.
+
+Contention is judged from the run's own readings.  A row whose minimum
+is still unconfirmed ships ``"contended": true`` (headline names are
+listed in ``queries_contended``).  A fixed calibration job is timed at
+the start and at the end of the run; both minima ship as
+``calibration_sec``, and the run is ``contended`` when they differ by
+more than _STALL_SPREAD_FACTOR of the smaller.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import sys
@@ -80,64 +88,35 @@ def main() -> None:
     # codegen compilation (seconds for the wide minhash/window exprs) is
     # paid before timing — the timed runs then measure the engine.
     for name in HEADLINE:
-        QUERIES[name](spark, "/root/testdata/sf0.001").count()
+        _full(QUERIES[name](spark, "/root/testdata/sf0.001"))
+    calibration = [_calibration(spark)]
 
-    # fault the benchmark parquet into page cache sequentially: the
-    # VM's cache is unreliably evicted, and concurrent cold readers
-    # thrash the virtio disk — we measure the engine, not the disk
-    import glob as _glob
+    def prewarm() -> None:
+        spark.catalog.clearCache()
+        for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
+            _fault_in(p)
 
-    def prewarm_parquet() -> None:
-        for p in _glob.glob(os.path.join(sf_dir, "*.parquet")):
-            with open(p, "rb") as fh:
-                while fh.read(1 << 24):
-                    pass
+    rows = {
+        name: _time_row(lambda: _full(QUERIES[name](spark, sf_dir)), prewarm)
+        for name in HEADLINE
+    }
+    timings = {name: row["sec"] for name, row in rows.items()}
 
-    # per-query min-of-3 with a cache prewarm before each pass — the
-    # same policy as _bench_wikidump: the host throttles bursts 2-3x,
-    # so single-shot timings swing ±25% on identical code; the min is
-    # the engine's steady-state number.  The (max-min) spread rides
-    # along so cross-round comparisons can tell host noise (uniform
-    # nonzero spreads) from real regressions — the r05→r06 +16%
-    # uniform drift across untouched queries was exactly that.
-    raw: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    for _ in range(3):
-        prewarm_parquet()
-        for name in HEADLINE:
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).count()
-            raw[name].append(time.perf_counter() - t0)
-    # stall fallback (round-13 verdict item 6; rule + rationale at
-    # _needs_stall_rerun): an UNCONFIRMED min-of-3 gets up to 2 extra
-    # runs until a second reading confirms the minimum
-    for name in HEADLINE:
-        for _ in range(_STALL_EXTRA_RUNS):
-            if not _needs_stall_rerun(raw[name]):
-                break
-            prewarm_parquet()
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).count()
-            raw[name].append(time.perf_counter() - t0)
-    timings = {name: round(min(v), 3) for name, v in raw.items()}
-    spreads = {name: round(max(v) - min(v), 3) for name, v in raw.items()}
-
-    wikidump = _bench_wikidump(spark)
+    wikidump = _bench_wikidump(spark, cpus)
     extras = _bench_pipeline_extras(spark, sf_dir)
-    sf1_spot = _bench_sf1_spot(spark, sf_dir, {**timings, **(extras or {})})
+    sf01 = {**timings, **{n: r["sec"] for n, r in (extras or {}).items()}}
+    sf1_spot = _bench_sf1_spot(spark, sf_dir, sf01)
+    calibration.append(_calibration(spark))
+    verdict = _calibrated(*calibration)
+    contended = [name for name, row in rows.items() if row.get("contended")]
 
-    total = round(sum(timings[n] for n in HEADLINE), 3)
-    # Round-18 (r17 verdict item 6): surface the shuffle-heavy sf1 spot
-    # minima as ADDITIONAL ``queries`` entries (additive only — the
-    # headline names and the timed action are unchanged, and ``value``
-    # sums the HEADLINE names only).  Rationale: the driver re-runs the
-    # bench at a lower core count and ratios the ``queries`` dict, but
-    # at sf0.1 every headline query is sub-second and fixed driver
-    # latency dominates, so the 8-vs-32-core ratio reads ≈1 regardless
-    # of plan quality.  These four queries at sf1 are the suite's
-    # shuffle-bound work (multi-second, exchange-heavy), so their
-    # entries give the driver's scaling check a signal that actually
-    # measures parallelism.  The sec values are the SAME spot minima
-    # recorded in BENCH_SELF's sf1_spot section (no extra runs).
+    total = round(sum(timings.values()), 3)
+    # the shuffle-bound sf1 spot minima also print as ``sf1_<name>``
+    # entries of ``queries`` (``value`` sums the HEADLINE names only):
+    # every headline query at sf0.1 is sub-second and fixed driver
+    # latency dominates, so a lower-core-count re-run of the bench reads
+    # ≈1 on them whatever the plan; these multi-second, exchange-heavy
+    # rows give a core-count ratio that measures parallelism
     if sf1_spot is not None:
         for _n in _SF1_SCALING_ROWS:
             if _n in sf1_spot:
@@ -147,22 +126,18 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "sf": sf,
+        **verdict,
+        "queries_contended": contended,
         "queries": timings,
-        "queries_spread": spreads,
+        "queries_spread": {name: row["spread_sec"] for name, row in rows.items()},
         "wikidump": wikidump,
     }
     if sf1_spot is not None:
         full["sf1_spot"] = sf1_spot
     if extras is not None:
         full["pipeline_extras"] = extras
-    # headline-suite self-adjudication (round-13 verdict item 2): a
-    # stall-inflated total carries its quiet-host watermark in BOTH
-    # the committed file and the printed line
-    headline_wm = _HEADLINE_ISOLATED_WATERMARKS.get(sf)
-    _annotate_headline(full, total, headline_wm)
-    # rehearsal runs pass --no-artifact (round-11 verdict item 8) so
-    # mid-round timing passes don't churn the committed artifact — the
-    # history stays one row per round and the diffs reviewable
+    # rehearsal runs pass --no-artifact so mid-change timing passes
+    # don't churn the committed artifact
     if "--no-artifact" in sys.argv:
         self_path = os.path.join(
             tempfile.gettempdir(), f"bench_self_rehearsal_{os.getpid()}.json"
@@ -174,23 +149,20 @@ def main() -> None:
     with open(self_path, "w") as fh:
         json.dump(full, fh, indent=2, sort_keys=True)
         fh.write("\n")
-    # compact printed line (round-11 verdict item 3): the driver keeps
-    # only the LAST ~2000 characters of stdout, so the line must fit
-    # that window IN FULL or the artifact ships `parsed: null` (r07 and
-    # r11 both lost their headline this way).  sf1_spot and the spreads
-    # therefore stay file-only (BENCH_SELF.json is committed and the
-    # `full` key points at it); the line carries the headline total,
-    # per-query timings, and the compact wikidump numbers.
+    # compact printed line: it must fit the driver's ~2000-character
+    # tail capture IN FULL, so sf1_spot and the spreads stay file-only
+    # (the `full` key points at the file)
     out = {
         "metric": "headline_suite_seconds",
         "unit": "sec",
         "full": os.path.basename(self_path),
+        **verdict,
         "wikidump": wikidump,
         "value": total,
         "sf": sf,
+        "queries_contended": contended,
         "queries": timings,
     }
-    _annotate_headline(out, total, headline_wm)
     line = json.dumps(out)
     if len(line) > 1900:  # keep headroom under the 2000-char capture
         out.pop("wikidump", None)
@@ -199,10 +171,119 @@ def main() -> None:
     spark.stop()
 
 
-# Round-6 training-pipeline additions, timed separately so the
-# headline total stays comparable across rounds.  dedup_clusters is
-# iterative (its timing includes every convergence round + the
-# localCheckpoint materializations).
+def _fault_in(path: str) -> None:
+    """Read ``path`` once, sequentially, into the page cache: the VM's
+    cache is unreliably evicted between runs, and concurrent cold
+    readers thrash the virtio disk far worse than one sequential pass —
+    the bench measures the engine, not the disk."""
+    with open(path, "rb") as fh:
+        while fh.read(1 << 24):
+            pass
+
+
+def _full(df) -> None:
+    """Compute every output column of ``df`` into a noop sink.  A
+    ``.count()`` lets Catalyst prune what a count does not need (q1's
+    count plan keeps the group-by and drops every SUM/AVG)."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+# Stall fallback: a pass whose three timed runs ALL landed in host
+# stalls inflates even the minimum.  The shipped min is trusted once a
+# SECOND run CONFIRMS it (lands within _STALL_SPREAD_FACTOR of it) — a
+# lone outlier-fast run proves nothing was steady-state; two agreeing
+# minima do.  While the min is unconfirmed after the standard passes,
+# take up to _STALL_EXTRA_RUNS extra timed runs (each behind a fresh
+# prewarm).  Confirmation — not total spread — is the loop condition
+# on purpose: spread (max - min) can only GROW as runs append, so a
+# spread-based condition could never be satisfied by new evidence,
+# while "did a second run land near the min" can (and usually is
+# already true for a merely-noisy pass, e.g. [1.0, 1.0, 1.8], which
+# ships with no extra runs).  The recorded spread keeps the stalled
+# maximum on purpose: a wide spread is the artifact's own signature of
+# a noisy pass.
+_STALL_SPREAD_FACTOR = 0.5
+_STALL_EXTRA_RUNS = 2
+
+
+def _needs_stall_rerun(values: list[float]) -> bool:
+    """True while NO second run has landed within _STALL_SPREAD_FACTOR
+    of the minimum — i.e. the min is a one-off nobody reproduced."""
+    lo = sorted(values)[:2]
+    return lo[1] - lo[0] > _STALL_SPREAD_FACTOR * lo[0]
+
+
+def _timed_runs(run, prewarm, passes: int = 3) -> list[float]:
+    """min-of-N timing loop with the confirmed-min stall fallback —
+    the one timing rule every bench row goes through.  ``run`` returns
+    elapsed seconds; ``prewarm`` runs, untimed, before every timed pass.
+    While no second run confirms the minimum, up to _STALL_EXTRA_RUNS
+    extra passes are taken."""
+    dts = []
+    for _ in range(passes):
+        prewarm()
+        dts.append(run())
+    for _ in range(_STALL_EXTRA_RUNS):
+        if not _needs_stall_rerun(dts):
+            break
+        prewarm()
+        dts.append(run())
+    return dts
+
+
+def _row(dts: list[float]) -> dict:
+    """One timed row as shipped: the minimum, the spread to the slowest
+    run and, when no second run confirmed the minimum even after the
+    extra runs, ``"contended": true`` — the host set that reading."""
+    best = min(dts)
+    row = {"sec": round(best, 3), "spread_sec": round(max(dts) - best, 3)}
+    if _needs_stall_rerun(dts):
+        row["contended"] = True
+    return row
+
+
+def _time_row(work, prewarm) -> dict:
+    """The shipped row for ``work`` timed through ``_timed_runs``."""
+
+    def run() -> float:
+        t0 = time.perf_counter()
+        work()
+        return time.perf_counter() - t0
+
+    return _row(_timed_runs(run, prewarm))
+
+
+# The calibration job: one fixed-size CPU-bound aggregate, the same
+# work whatever the scale factor (~1 s on 4 cores).
+_CALIBRATION_ROWS = 500_000_000
+
+
+def _calibration(spark) -> float:
+    """Minimum seconds of the calibration job, timed like every row."""
+
+    def job() -> None:
+        # a fresh frame per run: re-running one frame reuses its
+        # shuffle output and times only the final stage
+        spark.range(_CALIBRATION_ROWS).selectExpr("sum(hash(id))").collect()
+
+    job()  # codegen and JIT warm-up
+    return _time_row(job, lambda: None)["sec"]
+
+
+def _calibrated(start: float, end: float) -> dict:
+    """The run-level verdict: the calibration minima at the start and
+    the end of the run, and ``contended`` when they differ by more than
+    _STALL_SPREAD_FACTOR of the smaller — the rule that confirms a
+    row's minimum, applied to the two readings of one fixed job."""
+    return {
+        "calibration_sec": [start, end],
+        "contended": _needs_stall_rerun([start, end]),
+    }
+
+
+# Training-pipeline rows, timed separately so the headline total stays
+# comparable.  dedup_clusters is iterative (its timing includes every
+# convergence round + the localCheckpoint materializations).
 _PIPELINE_EXTRAS = (
     "dedup_clusters",
     "dedup_verify_pairs",
@@ -218,63 +299,54 @@ _PIPELINE_EXTRAS = (
     "text_quality_model",
     "chunk_documents",
     "text_scrub_pii",
-    # round 8: the checkpoint-free distributed prefix sum
+    # the checkpoint-free distributed prefix sum
     "pack_token_budget",
-    # round 9: C4-style segment-frequency (line) dedup
+    # C4-style segment-frequency (line) dedup
     "dedup_line_frequency",
-    # round 9: DSIR importance weighting (model fit + scoring pass)
+    # DSIR importance weighting (model fit + scoring pass)
     "dsir_weights",
-    # round 9: C4 line-rule cleaning (row-local rule pass — its cost
-    # IS the scan)
+    # C4 line-rule cleaning (row-local rule pass — its cost IS the scan)
     "text_c4_clean",
-    # round 9: exact-substring span dedup (positional window explode +
-    # dup aggregate + rewrite) and SemDeDup resolution (capped
-    # embedding pairs + iterative components).  semantic_dedup must
-    # NOT join the sf1 spot: the 10x replica copies embeddings
-    # verbatim (only vec_id shifts), so identical vectors pair across
-    # copies and the pair count grows quadratically in the replication
-    # factor — a data artifact, not engine scaling.
+    # exact-substring span dedup (positional window explode + dup
+    # aggregate + rewrite) and SemDeDup resolution (capped embedding
+    # pairs + iterative components).  semantic_dedup must NOT join the
+    # sf1 spot: the 10x replica copies embeddings verbatim (only vec_id
+    # shifts), so identical vectors pair across copies and the pair
+    # count grows quadratically in the replication factor — a data
+    # artifact, not engine scaling.
     "dedup_span_exact",
     "semantic_dedup",
-    # round 10: the remaining round-9 operators (LM scores, the
-    # bounded-state sketch) + the new waterfill branch — sf0.1 numbers
-    # so their sf1 spots have a denominator
+    # LM scores, the bounded-state sketch and the waterfill branch —
+    # sf0.1 numbers so their sf1 spots have a denominator
     "text_lm_surprisal",
     "text_lm_bigram",
     "sketch_count_min",
     "mixture_waterfill",
-    # round 10: the int8 similarity kernel — timed next to the float
-    # brute-force headline (similarity_topk) so the artifact shows the
-    # quantized path's cost on the same probes/corpus
+    # the int8 similarity kernel, timed next to the float brute-force
+    # headline (similarity_topk) on the same probes/corpus
     "similarity_topk_int8",
-    # round 10: CCNet perplexity terciles (bounded-domain histogram —
-    # its cost is the scoring pass plus one tiny aggregate)
+    # CCNet perplexity terciles (bounded-domain histogram — its cost is
+    # the scoring pass plus one tiny aggregate)
     "text_lm_buckets",
-    # round 11: the int8 kernel composed into both bucketed ANN paths —
-    # timed next to their float twins (similarity_topk_lsh/_ivf gate
-    # queries) so the artifact tracks the composition's cost; isolated
-    # min-of-3 at sf0.1: int8 LSH 1.085 s vs float LSH 1.885 s (1.74x).
-    # Since round 12 the int8 IVF reads its WRITTEN index (train-once/
-    # search-many): the first invocation after a corpus change pays
-    # the integer Lloyd once and writes the artifact; the timed
-    # min-of-3 measures the steady-state SEARCH cost over the cached
-    # index — the number that matters at scale, where the build
-    # amortizes over every later search (the float IVF twin still
-    # builds inline, so the pair now contrasts the two deployment
-    # shapes as well as the two element widths)
+    # the int8 kernel composed into both bucketed ANN paths.  The int8
+    # IVF reads its WRITTEN index (train-once/search-many): the first
+    # invocation after a corpus change pays the integer Lloyd once and
+    # writes the artifact; the timed runs measure the steady-state
+    # SEARCH cost over the cached index
     "similarity_topk_int8_lsh",
     "similarity_topk_int8_ivf",
-    # round 11: SemDeDup blocking over int8 (two-family multiprobe) —
-    # timed next to the float embedding_cosine_dedup
+    # SemDeDup blocking over int8 (two-family multiprobe), next to the
+    # float embedding_cosine_dedup
     "embedding_cosine_dedup_int8",
-    # round 13: the streaming int8 IVF probe's batch analog — the
-    # micro-batch probe cost against the written index (the number a
-    # streaming deployment multiplies by its trigger rate)
+    # the streaming int8 IVF probe's batch analog — the micro-batch
+    # probe cost against the written index
     "similarity_probe_int8_stream_analog",
+    # the composed curation chain (_curate_e2e)
+    "curation_e2e",
 )
 
 
-def _curate_e2e(spark, sf_dir: str) -> int:
+def _curate_e2e(spark, sf_dir: str) -> None:
     """End-to-end curation chain (quality -> exact dedup -> near-dedup
     -> decontaminate -> mixture): one composed plan — the per-operator
     extras isolate stages; this is the "would the whole pipeline run"
@@ -291,58 +363,42 @@ def _curate_e2e(spark, sf_dir: str) -> int:
         mixture_weights={"src0": 5},
         token_budget=10**9,
     )
-    n = res.curated.count()
+    _full(res.curated)
     res.unpersist()
-    return n
+
+
+def _run_row(spark, name: str, data_dir: str) -> None:
+    """Compute one extras or spot row's full output: a catalog query,
+    or the composed curation chain."""
+    if name == "curation_e2e":
+        _curate_e2e(spark, data_dir)
+    else:
+        _full(QUERIES[name](spark, data_dir))
 
 
 def _bench_pipeline_extras(spark, sf_dir: str) -> dict | None:
     if not sf_dir.rstrip("/").endswith("sf0.1"):
         return None
-    extras: dict[str, float] = {}
-    spreads: dict[str, float] = {}
+    extras: dict[str, dict] = {}
     for name in _PIPELINE_EXTRAS:
-        QUERIES[name](spark, "/root/testdata/sf0.001").count()  # warm codegen
-        dts = []
-        for _ in range(3):
-            # unpersist-discipline fix (round-18, r17 verdict item 7):
-            # several extras persist model/intermediate frames without
-            # an unpersist hook (the query returns a lazy frame, so
-            # there is no in-query "end"), and within one bench process
-            # Spark's CacheManager substitutes a PRIOR invocation's
-            # still-registered InMemoryRelation into a later identical
-            # plan fragment — min-of-3 runs 2-3 then partly measure
-            # cached intermediates.  Clearing the cache before every
-            # timed run (outside the timed region) makes each run
-            # compute from the parquet inputs.  Methodology change is
-            # additive-honest: it can only RAISE readings vs r17 on the
-            # persist-carrying extras (disclosed in OPTIMIZATION_r18.md);
-            # headline queries carry no persists and are unaffected.
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).count()
-            dts.append(time.perf_counter() - t0)
-        extras[name] = round(min(dts), 3)
-        spreads[name] = round(max(dts) - min(dts), 3)
-
-    _curate_e2e(spark, "/root/testdata/sf0.001")
-    dts, n = [], 0
-    for _ in range(3):
-        spark.catalog.clearCache()  # same rule as the extras loop
-        t0 = time.perf_counter()
-        n = _curate_e2e(spark, sf_dir)
-        dts.append(time.perf_counter() - t0)
-    extras["curation_e2e"] = round(min(dts), 3)
-    spreads["curation_e2e"] = round(max(dts) - min(dts), 3)
-    extras["curation_e2e_docs_kept"] = n
-    extras["_spread"] = spreads
+        _run_row(spark, name, "/root/testdata/sf0.001")  # warm codegen
+        # several extras persist intermediate frames with no unpersist
+        # hook (a query returns a lazy frame), and Spark's CacheManager
+        # would substitute a PRIOR run's still-registered
+        # InMemoryRelation into a later identical plan fragment, so a
+        # later run partly measures cached intermediates: clearing the
+        # cache before every timed run makes each one compute from the
+        # parquet inputs
+        extras[name] = _time_row(
+            lambda: _run_row(spark, name, sf_dir), spark.catalog.clearCache
+        )
     return extras
 
 
 # The sf1 spot rows whose minima ALSO print as `sf1_<name>` entries in
-# the compact line's ``queries`` dict (round-18, r17 verdict item 6) —
-# the shuffle-bound multi-second queries where an 8-vs-32-core ratio
-# measures parallelism rather than fixed driver latency.
+# the compact line's ``queries`` dict — the shuffle-bound multi-second
+# queries where a core-count ratio measures parallelism rather than
+# fixed driver latency.
 _SF1_SCALING_ROWS = (
     "minhash_lsh_pairs",
     "dedup_clusters",
@@ -350,33 +406,29 @@ _SF1_SCALING_ROWS = (
     "curation_e2e",
 )
 
-# The three historically slowest headline queries, re-timed at 10x the
-# bench scale to show where the scaling curve bends (the judge's
-# "linear-ish or explain" check).
+# The historically slowest queries, re-timed at 10x the bench scale to
+# show where the scaling curve bends.
 _SF1_SPOT_QUERIES = (
     "minhash_lsh_pairs",
     "q3_top_revenue",
     "similarity_topk",
-    # round 6: the iterative cluster-resolution pipeline — its 10x
-    # ratio shows fixpoint rounds + per-round overhead scaling, not
-    # just one plan
+    # the iterative cluster-resolution pipeline — its 10x ratio shows
+    # fixpoint rounds + per-round overhead scaling, not just one plan
     "dedup_clusters",
-    # round 7: the full curation chain (persist + CC + mixture) — its
-    # scaling curve is measured, not argued — and the de-skewed
-    # cross-doc overlap (checkpointed explode + two hash aggregates)
+    # the full curation chain (persist + CC + mixture) and the
+    # de-skewed cross-doc overlap (checkpointed explode + two hash
+    # aggregates)
     "curation_e2e",
     "ngram_overlap",
-    # round 8: the exact-Jaccard rerank — candidate-bound by design,
-    # so its 10x ratio shows whether cost really tracks the capped
-    # candidate set rather than the corpus
+    # the exact-Jaccard rerank — candidate-bound by design, so its 10x
+    # ratio shows whether cost really tracks the capped candidate set
+    # rather than the corpus
     "dedup_verify_pairs",
-    # round 9: segment-frequency dedup — the explode + two-level
-    # aggregate + join + reassembly chain; its 10x ratio shows the
-    # dup-table aggregate and the rewrite join scaling together
+    # segment-frequency dedup — the explode + two-level aggregate +
+    # join + reassembly chain scaling together
     "dedup_line_frequency",
-    # round 9: DSIR weighting — one conditional model aggregate + the
-    # broadcast lambda join over the exploded features; its 10x ratio
-    # shows the model fit and the scoring pass scaling together
+    # DSIR weighting — one conditional model aggregate + the broadcast
+    # lambda join over the exploded features
     "dsir_weights",
     # dedup_span_exact and semantic_dedup must NOT run on THIS replica:
     # the 'e'-only text substitution leaves every e-free 5-token window
@@ -384,256 +436,43 @@ _SF1_SPOT_QUERIES = (
     # copies, and embeddings are copied verbatim (only vec_id shifts) —
     # both become corpus-duplicated ONLY at sf1, so the ratio would
     # read as super-linear engine scaling when it is a replication
-    # artifact.  They (and the other round-9 heavy operators) spot on
-    # the DEDICATED replica below instead.
+    # artifact.  They spot on the DEDICATED replica below instead.
 )
 
-# Round-10: the round-9 heavy operators' 10x points (round-9 verdict
-# item 3), measured on a SECOND replica built to remove the artifacts
-# above: document text substitutes BOTH 'e' and 'a' per copy (a 5-token
-# window must dodge both letters in all five tokens to stay duplicated
-# across copies — the residual artifact is QUANTIFIED in the spot
-# entry: dup_windows_x10 is the sf1/sf0.1 ratio of distinct duplicated
-# fingerprints, ~10 when replication added none), and embeddings get a
-# per-copy deterministic SIGNED PERMUTATION (round-11: upgraded from
-# the diagonal sign-flip mask — a permutation mixes dimensions, so a
-# cluster-pair's cross-copy cosines no longer share one coherent
-# value; within-copy cosines stay EXACT, the map is orthogonal).
-# NOTE (round-11 decomposition, SCALING.md): no per-copy orthogonal
-# map can make the near-dup PAIR COUNT scale linearly on this fixture
-# — the base data's own far-pair cosine tail at the 0.35 threshold is
-# ~0.2% (the threshold sits only 2.8 sigma out at d=64), so ~45 copy-
-# pairs x 4e6 vector-pairs x 0.2% =~ 370k cross edges arise from the
-# GEOMETRY, whatever the transform (diagonal mask / signed perm / full
-# QR rotation all measure ~385k).  The honest engine meter is
-# therefore COST PER EDGE (sec_per_10k_pairs / x_engine_per_pair in
-# the spot entry), with pairs_x10 left in as the data meter.
-# text_lm_bigram / sketch_count_min have no such artifact, but they
-# ride the same replica so one build serves all four.
+# The heavy operators' 10x points, measured on a SECOND replica built
+# to remove the artifacts above: document text substitutes BOTH 'e' and
+# 'a' per copy (a 5-token window must dodge both letters in all five
+# tokens to stay duplicated across copies — the residual artifact is
+# QUANTIFIED in the spot entry: dup_windows_x10 is the sf1/sf0.1 ratio
+# of distinct duplicated fingerprints, ~10 when replication added
+# none), and embeddings get a per-copy deterministic SIGNED PERMUTATION
+# (a permutation mixes dimensions, so a cluster-pair's cross-copy
+# cosines no longer share one coherent value; within-copy cosines stay
+# EXACT, the map is orthogonal).
+# NOTE (SCALING.md, "Round-11 semantic replica decomposition"): no
+# per-copy orthogonal map can make the near-dup PAIR COUNT scale
+# linearly on this fixture — the base data's own far-pair cosine tail
+# at the 0.35 threshold is ~0.2% (the threshold sits only 2.8 sigma out
+# at d=64), so ~45 copy-pairs x 4e6 vector-pairs x 0.2% =~ 370k cross
+# edges arise from the GEOMETRY, whatever the transform.  The honest
+# engine meter is therefore COST PER EDGE (sec_per_10k_pairs /
+# x_engine_per_pair in the spot entry), with pairs_x10 left in as the
+# data meter.  text_lm_bigram / sketch_count_min have no such artifact,
+# but they ride the same replica so one build serves all of them.
 _SF1_SPAN_QUERIES = (
     "dedup_span_exact",
     "semantic_dedup",
     "text_lm_bigram",
     "sketch_count_min",
-    # round 12: the two newest int8 compositions become RECURRING sf1
-    # spots (they were one-off isolated measurements in r11) — the
-    # bucketed probe should stay ~scale-free, and the multiprobe
-    # blocking pass carries the same per-edge meter as semantic_dedup
-    # (the signed-permutation replica hands it ~70x the pairs at 10x
-    # the vectors, so the raw ratio is edge growth, not engine cost)
+    # the bucketed int8 probe should stay ~scale-free, and the
+    # multiprobe blocking pass carries the same per-edge meter as
+    # semantic_dedup (the replica hands it ~70x the pairs at 10x the
+    # vectors, so the raw ratio is edge growth, not engine cost)
     "similarity_topk_int8_lsh",
     "embedding_cosine_dedup_int8",
 )
 _SF1_COPIES = 10
 _SF1_SHIFT = 100_000_000  # beyond every key range in the sf0.1 tables
-
-# Isolated sf1 watermarks (round-11 verdict item 2): per spot query,
-# the last recorded ISOLATED min-of-3 seconds (quiet host, fresh
-# process running nothing else — tools/spot_isolated.py; provenance in
-# SCALING.md).  `spread > min` cannot detect a pass whose minimum was
-# itself contended, so _time_spot also compares each shipped min
-# against its watermark: the documented intra-day host band is ~±25%
-# (SCALING.md, 8.5–10.5 s same-code same-day), so a min beyond
-# _HOST_BAND_FACTOR x the watermark is contention, not drift — it gets
-# one re-measure, then ships flagged `contended` with the watermark
-# alongside.  Re-record these whenever a spot query's plan or the
-# replica scheme changes (the round-12 values are on span-scheme-v2).
-_HOST_BAND_FACTOR = 2.0
-# recorded 2026-08-15 (round 12), tools/spot_isolated.py on a quiet
-# host, span-scheme-v2 replicas; full rows (sf0.1 legs, spreads,
-# ratios) in SCALING.md's round-12 section.  Round-17 re-record
-# (pre-registered trigger: the round's optimization diff changed the
-# build path / executed job structure of most spots): two daytime
-# tool windows S1/S2 (SCALING.md round-17 log); per the conservative
-# floor-move rule a floor moves DOWN to the lowest tool reading only
-# — 8 moved, 7 confirmed-from-above and keep their r12 values.
-# Round-18 re-record (pre-registered trigger: the round's memoization
-# layers changed the BUILD path of every spot; SCALING.md round-18
-# log): two tool windows S1/S2 (2026-08-18 ~00:06 and ~01:04 UTC,
-# both carrying visible contention bursts) — per the same
-# tool-readings-only DOWN-only rule, 6 floors moved to the lower of
-# the two windows' minima, 9 confirmed-from-above and keep their
-# prior values.  Note the persist-carrying spots (curation_e2e,
-# semantic_dedup, embedding_cosine_dedup_int8, text_lm_*) now time
-# with a cleared cache (the round's hygiene fix), so their readings
-# sit HONESTLY above floors recorded before that fix; the stale-high
-# residue only under-annotates, the conservative direction.
-_SF1_ISOLATED_WATERMARKS: dict[str, float] = {
-    "minhash_lsh_pairs": 2.733,
-    "q3_top_revenue": 1.242,
-    "similarity_topk": 0.779,
-    "dedup_clusters": 4.788,
-    "curation_e2e": 11.564,
-    "ngram_overlap": 3.582,
-    "dedup_verify_pairs": 3.102,
-    "dedup_line_frequency": 0.423,
-    "dsir_weights": 0.348,
-    "dedup_span_exact": 0.310,
-    "semantic_dedup": 11.421,
-    "text_lm_bigram": 0.373,
-    "sketch_count_min": 0.53,
-    "similarity_topk_int8_lsh": 0.416,
-    "embedding_cosine_dedup_int8": 9.124,
-}
-
-# Isolated quiet-host watermark for the HEADLINE SUITE TOTAL, keyed by
-# scale factor (round-13 verdict item 2): the round-13 driver artifact
-# recorded 10.59 s against a same-day builder band of 8.27-8.84 s, and
-# adjudicating that as host noise took SCALING.md archaeology plus an
-# independent judge re-run.  With a recorded watermark the artifact
-# self-describes: whenever the suite total exceeds
-# _HEADLINE_BAND_FACTOR x the watermark, both BENCH_SELF.json and the
-# printed line carry `headline_isolated_watermark_sec` so a
-# stall-inflated reading is adjudicable from the artifact alone.
-# Recorded by `tools/spot_isolated.py --headline` (min-of-3 per query
-# in a fresh process doing nothing else); provenance in SCALING.md's
-# round-14 addendum.  Re-record when a headline query's plan changes.
-_HEADLINE_BAND_FACTOR = 1.2
-_HEADLINE_ISOLATED_WATERMARKS: dict[float, float] = {
-    # recorded 2026-08-16 (round 14) by the documented tool,
-    # tools/spot_isolated.py --headline: 9.259 s, the lowest of four
-    # same-day tool readings (9.259 / 9.453 / 10.151 / 9.975 s).
-    # Round-14 shipped this dict briefly re-pinned to a single 8.421 s
-    # full-bench reading that fell BELOW the round's own
-    # pre-registered 9.24-12.06 s band; the round-14 ADVICE adjudged
-    # that calibration-to-the-most-favorable-reading a protocol
-    # violation, so the value may only move when re-recorded BY THE
-    # TOOL across multiple quiet windows (provenance in SCALING.md).
-    # The tool runs the same min-of-3 + stall-confirmation loop as the
-    # bench itself.
-    # Round-16 re-record (tools/spot_isolated.py --headline): the
-    # round-15 ADVICE flagged a persistent ~10-15% tool-above-bench
-    # offset (all seven prior tool readings 9.259-11.585 s vs quiet
-    # full-bench 8.07-9.06 s) that contradicted protocol identity.
-    # Root-caused by a same-window A/B — tool 9.003 s, then `bench.py
-    # --no-artifact` 8.577 s, then tool 8.497 s back-to-back
-    # (2026-08-16 ~20:37-20:50 UTC; full log in SCALING.md round-16):
-    # the second tool reading lands BELOW the adjacent bench reading,
-    # so there is no systematic tool overhead — every prior tool
-    # window was contended.  That A/B window recorded 8.497 s; two
-    # post-midnight windows later the same night (W5 7.955 s, W6
-    # 7.870 s — adjacent runs agreeing within 1.1%, the quietest host
-    # state ever observed) lowered the floor to 7.870 s.
-    # Round-18 re-record (pre-registered trigger: the memoization
-    # layers changed every headline query's build path): four tool
-    # windows W1-W4 (SCALING.md round-18 log: 8.088 / 7.553 / 12.128
-    # burst / 7.621 s); W2 lands below the old floor, so per the
-    # DOWN-only tool-readings rule the watermark is 7.553 s
-    # (annotation band 1.2x = 9.06 s).
-    0.1: 7.553,
-}
-
-
-def _annotate_headline(entry: dict, total: float, wm: float | None) -> dict:
-    """Attach the isolated headline watermark whenever the shipped
-    suite total exceeds the quiet-host band (total > 1.2x watermark) —
-    the suite-level twin of `_annotate_spot`.  Keeps `queries` as the
-    entry's LAST key when present (the printed-line tail contract —
-    the driver captures only the final 2000 chars).  Pinned by
-    tests/test_bench_contract.py."""
-    if wm is not None and total > _HEADLINE_BAND_FACTOR * wm:
-        entry["headline_isolated_watermark_sec"] = wm
-        if "queries" in entry:
-            entry["queries"] = entry.pop("queries")
-    return entry
-
-
-# Stall fallback for the headline min-of-3 (round-13 verdict item 6):
-# SCALING.md documents a pass whose three timed runs ALL landed in
-# multi-second host stalls (ngram_overlap 16.3 s first pass, r13), so
-# even the min was inflated.  The shipped min is trusted once a
-# SECOND run CONFIRMS it (lands within _STALL_SPREAD_FACTOR of it) —
-# a lone outlier-fast run proves nothing was steady-state; two
-# agreeing minima do.  While the min is unconfirmed after the
-# standard passes, take up to _STALL_EXTRA_RUNS extra timed runs
-# (each behind a fresh prewarm) before shipping it.  Confirmation —
-# not total spread — is the loop condition on purpose: spread
-# (max - min) can only GROW as runs append, so a spread-based
-# condition could never be satisfied by new evidence, while "did a
-# second run land near the min" can (and usually is already true for
-# a merely-noisy pass, e.g. [1.0, 1.0, 1.8], which ships with no
-# extra runs).  The recorded spread keeps the stalled maximum ON
-# PURPOSE: a wide spread is the artifact's own signature of a noisy
-# pass (the r13 adjudication leaned on exactly that).
-_STALL_SPREAD_FACTOR = 0.5
-_STALL_EXTRA_RUNS = 2
-
-
-def _needs_stall_rerun(values: list[float]) -> bool:
-    """True while NO second run has landed within _STALL_SPREAD_FACTOR
-    of the minimum — i.e. the min is a one-off nobody reproduced."""
-    lo = sorted(values)[:2]
-    return lo[1] - lo[0] > _STALL_SPREAD_FACTOR * lo[0]
-
-
-def _timed_runs(run, prewarm, passes: int = 3) -> list[float]:
-    """min-of-N timing loop with the confirmed-min stall fallback —
-    THE shared policy (round-14 verdict item 4 extended it from the
-    headline queries to the wikidump pipeline rows, whose r14 spreads
-    ran up to 1.12 s on 2-4 s minima with no confirmation rule).
-    ``run`` returns elapsed seconds; ``prewarm`` refaults the input
-    before every timed pass.  While no second run confirms the
-    minimum, up to _STALL_EXTRA_RUNS extra passes are taken."""
-    dts = []
-    for _ in range(passes):
-        prewarm()
-        dts.append(run())
-    for _ in range(_STALL_EXTRA_RUNS):
-        if not _needs_stall_rerun(dts):
-            break
-        prewarm()
-        dts.append(run())
-    return dts
-
-
-# Isolated quiet-host watermarks for the wikidump pipeline rows
-# (round-14 verdict item 4): the r14 driver artifact's plain/bz2/
-# markup rows shipped spreads of 0.43-1.12 s on 2.3-3.9 s minima with
-# no self-adjudication — reading the bz2 14.53 GB/core-hour against
-# the same-day quiet 21.87 took SCALING.md archaeology.  Each row
-# records the quiet-host minimum SECONDS and the raw input GB it was
-# measured at: the corpora are deterministic and size-pinned, so
-# seconds are comparable run-to-run, and a nonstandard
-# SPARK_GRAFT_BENCH_BYTES (different corpus) makes the watermark
-# silently inapplicable rather than wrong.  Recorded by
-# `tools/spot_isolated.py --wikidump` on a quiet host (the same
-# min-of-3 + stall-confirmation protocol as the bench itself);
-# provenance in SCALING.md's round-15 section.  Re-record when the
-# diffdb pipeline or the corpus generators change.
-_WIKIDUMP_ISOLATED_WATERMARKS: dict[str, dict] = {
-    # recorded 2026-08-16 (round 15), tools/spot_isolated.py
-    # --wikidump across SIX same-day windows (each reading is itself
-    # a min-of-3 + stall-confirmation inside _bench_wikidump):
-    #   plain  2.38 / 1.90 / 1.79 / 2.07 / 1.83 / 1.86 s
-    #   bz2    3.44 / 2.90 / 2.43 / 2.96 / 2.40 / 2.35 s
-    #   markup 3.03 / 2.50 / 2.41 / 2.81 / 2.03 / 2.00 s
-    # Watermark = the lowest tool reading per row (the headline rule:
-    # a higher one would under-annotate genuinely stalled artifacts),
-    # each confirmed by a sibling window within a few percent; full
-    # window log in SCALING.md's round-15 section.
-    "plain": {"sec": 1.79, "input_gb": 0.5},
-    "bz2": {"sec": 2.35, "input_gb": 0.5},
-    "markup": {"sec": 2.00, "input_gb": 0.25},
-}
-
-
-def _annotate_wikidump(entry: dict, key: str, raw_gb: float, cpus: int) -> dict:
-    """Attach the isolated quiet-host watermark — and the GB/core-hour
-    it implies — to a wikidump row whose shipped minimum exceeds the
-    band (same 1.2x rule as the headline total), so a contended
-    throughput number self-adjudicates from the artifact alone instead
-    of needing SCALING.md context (round-14 verdict item 4).  A row
-    measured on a nonstandard corpus size carries no watermark (the
-    recorded one would be for a different corpus)."""
-    wm = _WIKIDUMP_ISOLATED_WATERMARKS.get(key)
-    if not wm or abs(raw_gb - wm["input_gb"]) > 0.01 * wm["input_gb"]:
-        return entry
-    if entry["sec"] > _HEADLINE_BAND_FACTOR * wm["sec"]:
-        entry["isolated_watermark_sec"] = wm["sec"]
-        entry["watermark_gb_per_core_hour"] = round(
-            raw_gb / (wm["sec"] / 3600) / cpus, 2
-        )
-    return entry
 
 
 def _build_sf1(spark, sf_dir: str, out_dir: str) -> None:
@@ -777,15 +616,13 @@ def _sf1_replica_dirs(spark, sf_dir: str) -> tuple[str, str]:
     (spot_dir, span_dir).  The cache key includes a replication-scheme
     version and the source tables' fingerprint, so a cached replica is
     never silently reused after the scheme changes or the sf0.1 tables
-    are regenerated.  Shared by the in-suite spot stage and
-    tools/spot_isolated.py (the isolated-watermark recorder)."""
-    import glob as _glob
+    are regenerated."""
     import hashlib as _hashlib
     import shutil as _shutil
 
     src_fp = _hashlib.sha256()
     src_fp.update(b"scheme-v2")
-    for p in sorted(_glob.glob(os.path.join(sf_dir, "*.parquet"))):
+    for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
         st = os.stat(p)
         src_fp.update(f"{os.path.basename(p)}:{st.st_size}:{int(st.st_mtime)}".encode())
     out_dir = os.path.join(
@@ -797,10 +634,10 @@ def _sf1_replica_dirs(spark, sf_dir: str) -> tuple[str, str]:
     span_dir = os.path.join(
         _corpus_base(), f"wikihadoop_sf1_span_{span_fp.hexdigest()[:12]}"
     )
-    for stale in _glob.glob(os.path.join(_corpus_base(), "wikihadoop_sf1_spot*")):
+    for stale in glob.glob(os.path.join(_corpus_base(), "wikihadoop_sf1_spot*")):
         if stale != out_dir:
             _shutil.rmtree(stale, ignore_errors=True)
-    for stale in _glob.glob(os.path.join(_corpus_base(), "wikihadoop_sf1_span*")):
+    for stale in glob.glob(os.path.join(_corpus_base(), "wikihadoop_sf1_span*")):
         if stale != span_dir:
             _shutil.rmtree(stale, ignore_errors=True)
     if not os.path.exists(out_dir):
@@ -810,90 +647,21 @@ def _sf1_replica_dirs(spark, sf_dir: str) -> tuple[str, str]:
     return out_dir, span_dir
 
 
-def _annotate_spot(
-    entry: dict, best: float, spread: float, wm: float | None, contended: bool
-) -> dict:
-    """Annotation rule for an sf1 spot entry (round-12 verdict item 5):
-    the `contended` flag travels when either self-qualifying trigger
-    fired, and the isolated quiet-host watermark is attached whenever
-    the reading is contended OR merely noisy (spread/min > 0.5) — a
-    noisy-but-protocol-compliant pair otherwise reads as clean to a
-    consumer of the artifact alone (r12 shipped ngram_overlap at
-    4.976 s with a 3.268 s spread and no context).  Pinned by
-    tests/test_bench_contract.py::test_spot_annotation_rule."""
-    if contended:
-        entry["contended"] = True
-    if wm is not None and (contended or spread > 0.5 * best):
-        entry["isolated_watermark_sec"] = wm
-    return entry
-
-
 def _bench_sf1_spot(spark, sf_dir: str, sf01_timings: dict) -> dict | None:
-    """Min-of-3 timings of the three slowest headline queries at 10x
-    scale, with the per-query ratio vs the sf0.1 timing."""
+    """Timings of the spot queries at 10x scale, with the per-query
+    ratio vs the sf0.1 timing."""
     if not sf_dir.rstrip("/").endswith("sf0.1"):
         return None  # spot check only applies at the standard bench sf
     out_dir, span_dir = _sf1_replica_dirs(spark, sf_dir)
 
     def _time_spot(name: str, data_dir: str) -> dict:
-        def run() -> None:
-            if name == "curation_e2e":
-                _curate_e2e(spark, data_dir)
-            else:
-                QUERIES[name](spark, data_dir).count()
-
-        run()  # warm plan + codegen
-
-        def _min3() -> tuple[float, float]:
-            dts = []
-            for _ in range(3):
-                # no cross-invocation CacheManager reuse (item 7; see
-                # the extras loop) — outside the timed region
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                run()
-                dts.append(time.perf_counter() - t0)
-            return min(dts), max(dts) - min(dts)
-
-        # self-qualifying protocol (round-10 verdict item 5): a spread
-        # larger than the measurement means the host was contended
-        # during the pass — re-measure once; if the retry is still
-        # noise-dominated, SHIP THE FLAG so the artifact never presents
-        # a noise-dominated ratio as a clean reading (two prior rounds
-        # needed manual isolated adjudication of exactly this).
-        # (best, spread) always travel as a PAIR from the pass that
-        # produced the shipped minimum (round-11 advisor): mixing
-        # pass-1's min with pass-2's spread could present a
-        # noise-dominated minimum as clean.
-        best, spread = _min3()
-        contended = spread > best
-        if contended:
-            b2, s2 = _min3()
-            if b2 < best:
-                best, spread = b2, s2
-            contended = spread > best
-        # second trigger (round-11 verdict item 2): `spread > min`
-        # cannot detect a pass whose MINIMUM was itself contended —
-        # r11's ngram_overlap shipped 9.6x with min 4x its isolated
-        # truth.  Compare against the recorded isolated watermark: the
-        # documented intra-day host band is ~±25% (SCALING.md round-11
-        # watermark, 8.5–10.5 s), so a min beyond 2x the watermark is
-        # not host drift — re-measure once, then flag.
-        wm = _SF1_ISOLATED_WATERMARKS.get(name)
-        if wm is not None and best > _HOST_BAND_FACTOR * wm:
-            b3, s3 = _min3()
-            if b3 < best:
-                best, spread = b3, s3
-            # re-evaluate BOTH triggers on the shipped pair: adopting
-            # (b3, s3) can introduce a spread > min that the first
-            # trigger's verdict predates (round-12 review finding)
-            contended = spread > best or best > _HOST_BAND_FACTOR * wm
-        entry = {
-            "sec": round(best, 3),
-            "spread_sec": round(spread, 3),
-            "x_vs_sf0.1": round(best / sf01_timings[name], 2),
-        }
-        return _annotate_spot(entry, best, spread, wm, contended)
+        _run_row(spark, name, data_dir)  # warm plan + codegen
+        # a fresh cache before every timed run, as in the extras loop
+        entry = _time_row(
+            lambda: _run_row(spark, name, data_dir), spark.catalog.clearCache
+        )
+        entry["x_vs_sf0.1"] = round(entry["sec"] / sf01_timings[name], 2)
+        return entry
 
     spot: dict[str, dict] = {}
     for name in _SF1_SPOT_QUERIES:
@@ -940,8 +708,8 @@ def _bench_sf1_spot(spark, sf_dir: str, sf01_timings: dict) -> dict | None:
         spot["semantic_dedup"]["sec_per_10k_pairs_sf0.1"] = round(per01, 3)
         spot["semantic_dedup"]["x_engine_per_pair"] = round(per1 / per01, 2)
     # the int8 multiprobe blocking pass carries the IDENTICAL per-edge
-    # meter (round 12 — it was a one-off isolated measurement in r11):
-    # the query returns pair rows, so the timed count IS the edge count
+    # meter: the query returns pair rows, so its row count IS the edge
+    # count
     i_sf1 = QUERIES["embedding_cosine_dedup_int8"](spark, span_dir).count()
     i_sf01 = QUERIES["embedding_cosine_dedup_int8"](spark, sf_dir).count()
     ent = spot["embedding_cosine_dedup_int8"]
@@ -955,113 +723,166 @@ def _bench_sf1_spot(spark, sf_dir: str, sf01_timings: dict) -> dict | None:
     return spot
 
 
-def _bench_wikidump(spark) -> dict:
-    """Full diffdb pipeline over a deterministic synthetic dump —
-    comparable to BASELINE.md's GB(raw XML)/core-hour full-pipeline
-    rate (~1.3 derived from fileformat.rst:37-41).  The dump (~60 MB,
-    3-8 KB wikitext bodies, small consecutive edits) is generated once
-    and cached in /tmp."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from wikihadoop_spark.plans.diffdb import build_diffdb
-    from wikihadoop_spark.sources.wikidump import read_wikidump
-
-    # tmpfs: this VM drops page cache unpredictably, and 32 concurrent
-    # cold readers collapse the virtio disk to a fraction of its
-    # sequential rate (observed 3-6x run-to-run swings); RAM-backed
-    # input makes the bench measure the engine
-    path = os.path.join(_corpus_base(), "wikihadoop_bench_dump.xml")
-    # >=500 MB so steady-state throughput dominates worker spin-up and
-    # codegen (at 60 MB fixed overhead flattened the rate ~10x)
-    target = int(os.environ.get("SPARK_GRAFT_BENCH_BYTES", 500_000_000))
-    if not (os.path.exists(path) and os.path.getsize(path) >= target):
-        rng = random.Random(7)
-        words = (
-            "the quick brown fox jumps over lazy dog wiki article section "
-            "reference citation template category"
-        ).split()
-        rid, pid, size = 1, 0, 0
-        with open(path, "w") as fh:
-            fh.write("<mediawiki>\n<siteinfo><sitename>B</sitename></siteinfo>\n")
-            while size < target:
-                pid += 1
-                body = " ".join(rng.choices(words, k=rng.randrange(400, 1200)))
-                revs = []
-                for r in range(rng.randrange(2, 8)):
-                    rid += 1
-                    body += " " + " ".join(rng.choices(words, k=10))
-                    revs.append(
-                        f"    <revision>\n      <id>{rid}</id>\n"
-                        f"      <timestamp>2022-05-{r + 1:02d}T00:00:00Z</timestamp>\n"
-                        f"      <contributor><username>U</username><id>1</id></contributor>\n"
-                        f'      <text xml:space="preserve">{body}</text>\n    </revision>\n'
-                    )
-                pg = (
-                    f"  <page>\n    <title>Article {pid}</title>\n    <ns>0</ns>\n"
-                    f"    <id>{pid}</id>\n" + "".join(revs) + "  </page>\n"
-                )
-                fh.write(pg)
-                size += len(pg)
-            fh.write("</mediawiki>\n")
-
-    size = os.path.getsize(path)
-    size_gb = size / 1e9
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # split so every core gets work (floor 2 MB to keep task overhead sane)
-    split = max(2 * 1024 * 1024, size // cpus)
-
-    def run() -> float:
-        # pairing AND the token diff run inside the source partition
-        # (the reference's in-mapper shape) — zero shuffle of text
-        # bodies and no second Arrow round-trip (equivalence vs the
-        # declarative UDF plan is asserted in tests/test_diffdb.py)
-        revs = read_wikidump(spark, path, splitSize=str(split))
-        t0 = time.perf_counter()
-        (
-            build_diffdb(revs)
-            .select(F.sum(F.size("ops")).alias("ops"), F.count(F.lit(1)).alias("rows"))
-            .collect()
-        )
-        return time.perf_counter() - t0
-
-    def prewarm_cache() -> None:
-        # the VM's page cache is unreliably evicted between runs; 32
-        # concurrent cold readers thrash the virtio disk ~10x worse
-        # than one sequential pass, so fault the file in sequentially
-        # and measure the engine, not the hypervisor
-        with open(path, "rb") as fh:
-            while fh.read(1 << 24):
-                pass
-
-    prewarm_cache()
-    run()  # warm python workers + codegen for this pipeline shape
-    # min-of-3 + confirmed-min stall fallback, same policy as the
-    # headline queries (round-14 verdict item 4)
-    dts = _timed_runs(run, prewarm_cache)
-    dt = min(dts)  # steady-state: the host throttles bursts 2-3x
-    # rate divides by ALLOCATED cores (the honest comparison with the
-    # reference's 700 GB / 24 cores / ~22 h ≈ 1.33 GB/core-hour)
-    # record which diff path ran: functions/native.py degrades silently
-    # to pure Python when no C toolchain exists, which would otherwise
-    # masquerade as a wikidump-throughput regression in this artifact
-    # (round-9 verdict item 7) — the flag is checked on the DRIVER, but
-    # local-mode workers share the host, so it is the workers' path too
+def _bench_wikidump(spark, cpus: int) -> dict:
+    """The diffdb job, dump to gzip TSV, over three deterministic
+    synthetic dumps — comparable to BASELINE.md's GB(raw XML)/core-hour
+    full-pipeline rate (~1.3 derived from fileformat.rst:37-41):
+    - plain: 3-8 KB wikitext bodies with small appended edits;
+    - bz2: the same dump bzip2-compressed, the reference's actual input
+      format (pages-meta-historyN.xml.bz2, fileformat.rst:33-38), read
+      through the block-aligned splittable reader;
+    - markup: the markup-dense corpus with mid-page edits, reported
+      separately so the friendly append-mostly corpus can't flatter
+      the headline rate.
+    Rates divide by ALLOCATED cores (the honest comparison with the
+    reference's 700 GB / 24 cores / ~22 h ≈ 1.33 GB/core-hour)."""
+    # ``native_kernel`` records which diff path ran: functions/native.py
+    # degrades silently to pure Python when no C toolchain exists, which
+    # would otherwise masquerade as a throughput regression (checked on
+    # the driver; local-mode workers share the host)
     from wikihadoop_spark.functions import native
 
-    result = {
-        "input_gb": round(size_gb, 3),
-        "sec": round(dt, 2),
-        "spread_sec": round(max(dts) - dt, 2),
+    # >=500 MB so steady-state throughput dominates worker spin-up and
+    # codegen (at 60 MB fixed overhead flattened the rate ~10x)
+    xml = _corpus(
+        "wikihadoop_bench_dump.xml", "SPARK_GRAFT_BENCH_BYTES", 500_000_000,
+        _gen_plain_corpus,
+    )
+    markup = _corpus(
+        "wikihadoop_bench_markup.xml", "SPARK_GRAFT_BENCH_MARKUP_BYTES",
+        250_000_000, _gen_markup_corpus,
+    )
+    bz2_path = _bz2_of(xml)
+    xml_gb = os.path.getsize(xml) / 1e9
+    markup_gb = os.path.getsize(markup) / 1e9
+
+    def split(path: str, floor: int) -> int:
+        # every core gets work; the floor keeps task overhead sane
+        return max(floor, os.path.getsize(path) // cpus)
+
+    return {
+        "input_gb": round(xml_gb, 3),
         "cores": cpus,
-        "gb_per_core_hour": round(size_gb / (dt / 3600) / cpus, 2),
         "native_kernel": native.load() is not None,
+        **_time_dump(spark, xml, split(xml, 2 << 20), xml_gb, cpus, "gb_per_core_hour"),
+        "bz2": {
+            "compressed_gb": round(os.path.getsize(bz2_path) / 1e9, 4),
+            **_time_dump(
+                spark, bz2_path, split(bz2_path, 256 << 10), xml_gb, cpus,
+                "raw_gb_per_core_hour",
+            ),
+        },
+        "markup": {
+            "input_gb": round(markup_gb, 3),
+            **_time_dump(
+                spark, markup, split(markup, 2 << 20), markup_gb, cpus,
+                "gb_per_core_hour",
+            ),
+        },
     }
-    _annotate_wikidump(result, "plain", size_gb, cpus)
-    result["bz2"] = _bench_wikidump_bz2(spark, path, size_gb, cpus)
-    result["markup"] = _bench_wikidump_markup(spark, cpus)
-    return result
+
+
+def _time_dump(
+    spark, path: str, split: int, raw_gb: float, cpus: int, rate_key: str
+) -> dict:
+    """One dump row: the diffdb job from the dump at ``path`` to its gzip
+    TSV parts (``write_diffdb_tsv``, the production sink), timed through
+    ``_timed_runs``.  The row carries the rate in raw XML GB per
+    core-hour under ``rate_key`` and the sink's ``path`` (``scan_tasks``
+    when the scan tasks wrote the parts)."""
+    from wikihadoop_spark.plans.diffdb import build_diffdb, write_diffdb_tsv
+    from wikihadoop_spark.sources.wikidump import read_wikidump
+
+    sink: dict = {}
+
+    def run() -> float:
+        # RAM-backed output next to the inputs; removing it is not timed
+        with tempfile.TemporaryDirectory(dir=_corpus_base()) as out:
+            t0 = time.perf_counter()
+            revs = read_wikidump(spark, path, splitSize=str(split))
+            sink.update(write_diffdb_tsv(build_diffdb(revs), os.path.join(out, "tsv")))
+            return time.perf_counter() - t0
+
+    _fault_in(path)
+    run()  # warm python workers + codegen for this pipeline shape
+    dts = _timed_runs(run, lambda: _fault_in(path))
+    row = _row(dts)
+    row[rate_key] = round(raw_gb / (min(dts) / 3600) / cpus, 2)
+    row["path"] = sink["path"]
+    return row
+
+
+def _corpus(name: str, size_env: str, default: int, generate) -> str:
+    """The cached bench corpus ``name``, (re)generated by ``generate``
+    when missing or smaller than $``size_env`` bytes.  tmpfs by default:
+    this VM drops page cache unpredictably, and RAM-backed input makes
+    the bench measure the engine."""
+    path = os.path.join(_corpus_base(), name)
+    target = int(os.environ.get(size_env, default))
+    if not (os.path.exists(path) and os.path.getsize(path) >= target):
+        generate(path, target)
+    return path
+
+
+def _gen_plain_corpus(path: str, target: int) -> None:
+    """Append-mostly synthetic dump: 3-8 KB wikitext bodies, each
+    revision adding ten words to the previous one."""
+    import random
+
+    rng = random.Random(7)
+    words = (
+        "the quick brown fox jumps over lazy dog wiki article section "
+        "reference citation template category"
+    ).split()
+    rid, pid, size = 1, 0, 0
+    tmp = path + f".tmp{os.getpid()}"
+    with open(tmp, "w") as fh:
+        fh.write("<mediawiki>\n<siteinfo><sitename>B</sitename></siteinfo>\n")
+        while size < target:
+            pid += 1
+            body = " ".join(rng.choices(words, k=rng.randrange(400, 1200)))
+            revs = []
+            for r in range(rng.randrange(2, 8)):
+                rid += 1
+                body += " " + " ".join(rng.choices(words, k=10))
+                revs.append(
+                    f"    <revision>\n      <id>{rid}</id>\n"
+                    f"      <timestamp>2022-05-{r + 1:02d}T00:00:00Z</timestamp>\n"
+                    f"      <contributor><username>U</username><id>1</id></contributor>\n"
+                    f'      <text xml:space="preserve">{body}</text>\n    </revision>\n'
+                )
+            pg = (
+                f"  <page>\n    <title>Article {pid}</title>\n    <ns>0</ns>\n"
+                f"    <id>{pid}</id>\n" + "".join(revs) + "  </page>\n"
+            )
+            fh.write(pg)
+            size += len(pg)
+        fh.write("</mediawiki>\n")
+    os.replace(tmp, path)
+
+
+def _bz2_of(xml_path: str) -> str:
+    """The bzip2 copy of ``xml_path``, regenerated when missing OR stale
+    vs the xml (e.g. a larger SPARK_GRAFT_BENCH_BYTES rebuilt the xml);
+    written atomically so a crash mid-compress can't leave a torn file
+    that silently benches the wrong input."""
+    import bz2
+
+    bz2_path = xml_path + ".bz2"
+    if not (
+        os.path.exists(bz2_path)
+        and os.path.getmtime(bz2_path) >= os.path.getmtime(xml_path)
+    ):
+        # level 1: fast one-time compress, 100k-sized blocks -> good
+        # split granularity
+        comp = bz2.BZ2Compressor(1)
+        tmp = bz2_path + f".tmp{os.getpid()}"
+        with open(xml_path, "rb") as f, open(tmp, "wb") as o:
+            while chunk := f.read(1 << 22):
+                o.write(comp.compress(chunk))
+            o.write(comp.flush())
+        os.replace(tmp, bz2_path)
+    return bz2_path
 
 
 def _gen_markup_corpus(path: str, target: int) -> None:
@@ -1154,121 +975,6 @@ def _gen_markup_corpus(path: str, target: int) -> None:
             size += len(pg)
         fh.write("</mediawiki>\n")
     os.replace(tmp, path)
-
-
-def _bench_wikidump_markup(spark, cpus: int) -> dict:
-    """Full diffdb pipeline over the markup-dense corpus — reported
-    separately so the friendly append-mostly corpus can't flatter the
-    headline rate."""
-    from pyspark.sql import functions as F
-
-    from wikihadoop_spark.plans.diffdb import build_diffdb
-    from wikihadoop_spark.sources.wikidump import read_wikidump
-
-    path = os.path.join(_corpus_base(), "wikihadoop_bench_markup.xml")
-    target = int(os.environ.get("SPARK_GRAFT_BENCH_MARKUP_BYTES", 250_000_000))
-    if not (os.path.exists(path) and os.path.getsize(path) >= target):
-        _gen_markup_corpus(path, target)
-    size = os.path.getsize(path)
-    size_gb = size / 1e9
-    split = max(2 * 1024 * 1024, size // cpus)
-
-    def run() -> float:
-        revs = read_wikidump(spark, path, splitSize=str(split))
-        t0 = time.perf_counter()
-        (
-            build_diffdb(revs)
-            .select(F.sum(F.size("ops")).alias("ops"), F.count(F.lit(1)).alias("rows"))
-            .collect()
-        )
-        return time.perf_counter() - t0
-
-    def prewarm() -> None:
-        with open(path, "rb") as fh:
-            while fh.read(1 << 24):
-                pass
-
-    prewarm()
-    run()
-    dts = _timed_runs(run, prewarm)
-    dt = min(dts)
-    return _annotate_wikidump(
-        {
-            "input_gb": round(size_gb, 3),
-            "sec": round(dt, 2),
-            "spread_sec": round(max(dts) - dt, 2),
-            "gb_per_core_hour": round(size_gb / (dt / 3600) / cpus, 2),
-        },
-        "markup",
-        size_gb,
-        cpus,
-    )
-
-
-def _bench_wikidump_bz2(spark, xml_path: str, size_gb: float, cpus: int) -> dict:
-    """Same pipeline over the bzip2-compressed dump — the reference's
-    actual input format (its ~1.33 GB/core-hour baseline reads
-    pages-meta-historyN.xml.bz2 directly, fileformat.rst:33-38).  The
-    block-aligned splittable reader (sources/bz2blocks.py) parallelizes
-    the single compressed file; rate reported as RAW XML GB/core-hour."""
-    import bz2
-
-    from pyspark.sql import functions as F
-
-    from wikihadoop_spark.plans.diffdb import build_diffdb
-    from wikihadoop_spark.sources.wikidump import read_wikidump
-
-    bz2_path = xml_path + ".bz2"
-    # regenerate when missing OR stale vs the xml (e.g. a larger
-    # SPARK_GRAFT_BENCH_BYTES rebuilt the xml); write atomically so a
-    # crash mid-compress can't leave a torn file that silently benches
-    # the wrong input
-    if not (
-        os.path.exists(bz2_path)
-        and os.path.getmtime(bz2_path) >= os.path.getmtime(xml_path)
-    ):
-        # level 1: fast one-time compress, 100k-sized blocks -> good
-        # split granularity
-        comp = bz2.BZ2Compressor(1)
-        tmp = bz2_path + f".tmp{os.getpid()}"
-        with open(xml_path, "rb") as f, open(tmp, "wb") as o:
-            while chunk := f.read(1 << 22):
-                o.write(comp.compress(chunk))
-            o.write(comp.flush())
-        os.replace(tmp, bz2_path)
-    comp_size = os.path.getsize(bz2_path)
-    split = max(256 * 1024, comp_size // cpus)
-
-    def run() -> float:
-        revs = read_wikidump(spark, bz2_path, splitsize=str(split))
-        t0 = time.perf_counter()
-        (
-            build_diffdb(revs)
-            .select(F.sum(F.size("ops")).alias("ops"), F.count(F.lit(1)).alias("rows"))
-            .collect()
-        )
-        return time.perf_counter() - t0
-
-    def prewarm() -> None:
-        with open(bz2_path, "rb") as fh:
-            while fh.read(1 << 24):
-                pass
-
-    prewarm()
-    run()
-    dts = _timed_runs(run, prewarm)
-    dt = min(dts)
-    return _annotate_wikidump(
-        {
-            "compressed_gb": round(comp_size / 1e9, 4),
-            "sec": round(dt, 2),
-            "spread_sec": round(max(dts) - dt, 2),
-            "raw_gb_per_core_hour": round(size_gb / (dt / 3600) / cpus, 2),
-        },
-        "bz2",
-        size_gb,
-        cpus,
-    )
 
 
 if __name__ == "__main__":

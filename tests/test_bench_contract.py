@@ -45,6 +45,13 @@ def test_bench_prints_one_json_line(tmp_path):
     assert d["unit"] == "sec" and d["sf"] == 0.001
     assert d["queries"] and all(isinstance(v, float) for v in d["queries"].values())
     assert "wikidump" in d and d["wikidump"]["gb_per_core_hour"] > 0
+    # the dump rows time the production sink, written by the scan tasks
+    wd = d["wikidump"]
+    assert wd["path"] == wd["bz2"]["path"] == wd["markup"]["path"] == "scan_tasks"
+    # the run-level contention verdict: both calibration minima ship
+    start, end = d["calibration_sec"]
+    assert start > 0 and end > 0 and isinstance(d["contended"], bool)
+    assert isinstance(d["queries_contended"], list)
     assert d["wikidump"]["bz2"]["raw_gb_per_core_hour"] > 0
     assert d["wikidump"]["markup"]["gb_per_core_hour"] > 0
     # durability contract (round-7 verdict): the driver keeps only the
@@ -68,68 +75,25 @@ def test_bench_prints_one_json_line(tmp_path):
     assert full["queries"] == d["queries"]
 
 
-def test_spot_annotation_rule():
-    """Round-12 verdict item 5: an sf1 spot entry must carry the
-    isolated quiet-host watermark whenever the shipped (min, spread)
-    pair is contended OR noisy (spread/min > 0.5), flag or no flag —
-    and must stay unannotated for a genuinely clean reading."""
+def test_contention_judged_from_own_readings():
+    """Contention is derived from the run's own readings: a row whose
+    minimum no second run confirmed (after the extra runs) ships
+    ``contended``, a confirmed one does not; the run is ``contended``
+    when the calibration job's start and end minima differ by more than
+    _STALL_SPREAD_FACTOR (0.5) of the smaller."""
     sys.path.insert(0, REPO)
-    from bench import _annotate_spot
+    from bench import _calibrated, _row
 
-    def entry():
-        return {"sec": 4.0, "spread_sec": 1.0, "x_vs_sf0.1": 2.0}
+    unconfirmed = _row([1.0, 9.0, 25.0, 64.0, 121.0])
+    assert unconfirmed["contended"] is True
+    assert unconfirmed["sec"] == 1.0 and unconfirmed["spread_sec"] == 120.0
+    confirmed = _row([1.0, 1.05, 1.8])
+    assert "contended" not in confirmed and confirmed["sec"] == 1.0
 
-    # clean reading, watermark known: no annotation
-    clean = _annotate_spot(entry(), 4.0, 1.0, wm=3.5, contended=False)
-    assert "contended" not in clean and "isolated_watermark_sec" not in clean
-    # noisy but unflagged (spread/min > 0.5): watermark attaches
-    noisy = _annotate_spot(entry(), 4.0, 2.5, wm=3.5, contended=False)
-    assert "contended" not in noisy
-    assert noisy["isolated_watermark_sec"] == 3.5
-    # contended: flag + watermark
-    flagged = _annotate_spot(entry(), 4.0, 5.0, wm=3.5, contended=True)
-    assert flagged["contended"] is True
-    assert flagged["isolated_watermark_sec"] == 3.5
-    # no watermark recorded yet (new spot query): flag only, no crash
-    virgin = _annotate_spot(entry(), 4.0, 5.0, wm=None, contended=True)
-    assert virgin["contended"] is True
-    assert "isolated_watermark_sec" not in virgin
-
-
-def test_headline_watermark_annotation_rule():
-    """Round-13 verdict item 2: the headline suite total must carry
-    its isolated quiet-host watermark whenever it exceeds 1.2x the
-    watermark — in BOTH the committed file and the printed line — so a
-    stall-inflated driver reading (r13's 10.59 s vs a same-day
-    8.27-8.84 s band) self-adjudicates in the artifact.  The `queries`
-    key must stay last when present (printed-line tail contract)."""
-    sys.path.insert(0, REPO)
-    from bench import (
-        _HEADLINE_ISOLATED_WATERMARKS,
-        _annotate_headline,
-    )
-
-    # the watermark for the driver's bench SF must actually be recorded
-    assert _HEADLINE_ISOLATED_WATERMARKS.get(0.1), (
-        "no isolated headline watermark recorded for sf0.1 — run "
-        "tools/spot_isolated.py --headline on a quiet host"
-    )
-
-    def entry():
-        return {"metric": "headline_suite_seconds", "value": 12.0,
-                "queries": {"q1": 1.0}}
-
-    # inside the band: no annotation
-    clean = _annotate_headline(entry(), 9.0, wm=8.5)
-    assert "headline_isolated_watermark_sec" not in clean
-    # beyond 1.2x: watermark attaches, queries stays the LAST key
-    hot = _annotate_headline(entry(), 10.6, wm=8.5)
-    assert hot["headline_isolated_watermark_sec"] == 8.5
-    assert list(hot)[-1] == "queries"
-    # no watermark recorded for this sf (e.g. the sf0.001 contract
-    # run): no annotation, no crash
-    virgin = _annotate_headline(entry(), 100.0, wm=None)
-    assert "headline_isolated_watermark_sec" not in virgin
+    quiet = _calibrated(1.0, 1.4)
+    assert quiet == {"calibration_sec": [1.0, 1.4], "contended": False}
+    assert _calibrated(1.0, 1.6)["contended"] is True
+    assert _calibrated(1.6, 1.0)["contended"] is True  # either direction
 
 
 def test_stall_rerun_rule():
@@ -153,57 +117,10 @@ def test_stall_rerun_rule():
     assert _STALL_EXTRA_RUNS == 2
 
 
-def test_wikidump_watermark_annotation_rule():
-    """Round-14 verdict item 4: the wikidump pipeline rows (plain /
-    bz2 / markup) must self-adjudicate like the headline total — a
-    contended minimum carries the recorded quiet-host watermark AND
-    the GB/core-hour it implies, so the throughput number reads
-    without SCALING.md archaeology.  A row measured on a nonstandard
-    corpus size must stay unannotated (the watermark was recorded on a
-    different corpus)."""
-    sys.path.insert(0, REPO)
-    from bench import (
-        _WIKIDUMP_ISOLATED_WATERMARKS,
-        _annotate_wikidump,
-    )
-
-    # all three rows must actually have recorded watermarks
-    for key in ("plain", "bz2", "markup"):
-        wm = _WIKIDUMP_ISOLATED_WATERMARKS.get(key)
-        assert wm and wm.get("sec") and wm.get("input_gb"), (
-            f"no isolated wikidump watermark recorded for {key!r} — run "
-            "tools/spot_isolated.py --wikidump on a quiet host"
-        )
-
-    wm = _WIKIDUMP_ISOLATED_WATERMARKS["plain"]
-    gb, cpus = wm["input_gb"], 32
-
-    def entry(sec):
-        return {"input_gb": gb, "sec": sec, "spread_sec": 0.1,
-                "gb_per_core_hour": round(gb / (sec / 3600) / cpus, 2)}
-
-    # inside the band: no annotation
-    clean = _annotate_wikidump(entry(wm["sec"] * 1.1), "plain", gb, cpus)
-    assert "isolated_watermark_sec" not in clean
-    # beyond 1.2x: watermark + implied quiet rate attach
-    hot = _annotate_wikidump(entry(wm["sec"] * 1.5), "plain", gb, cpus)
-    assert hot["isolated_watermark_sec"] == wm["sec"]
-    assert hot["watermark_gb_per_core_hour"] == round(
-        gb / (wm["sec"] / 3600) / cpus, 2
-    )
-    # nonstandard corpus (SPARK_GRAFT_BENCH_BYTES override): silent no-op
-    off = _annotate_wikidump(entry(wm["sec"] * 9), "plain", gb * 3, cpus)
-    assert "isolated_watermark_sec" not in off
-    # unknown row key: no crash, no annotation
-    assert "isolated_watermark_sec" not in _annotate_wikidump(
-        entry(99.0), "nonesuch", gb, cpus
-    )
-
-
 def test_timed_runs_shared_stall_policy():
-    """The wikidump rows time through the same confirmed-min loop as
-    the headline queries (_timed_runs): an unconfirmed minimum takes
-    extra passes (bounded), a confirmed one stops at 3."""
+    """Every bench row times through the one confirmed-min loop
+    (_timed_runs): an unconfirmed minimum takes extra passes (bounded),
+    a confirmed one stops at 3."""
     sys.path.insert(0, REPO)
     from bench import _STALL_EXTRA_RUNS, _timed_runs
 

@@ -303,14 +303,12 @@ def test_connected_components_raises_past_max_iterations(spark):
 
 
 def test_star_components_equal_min_label_on_random_graphs(spark):
-    """large-star/small-star must produce exactly the min-label
-    components on random graphs (mixed cliques, chains, isolates)."""
+    """connected_components must label every vertex with the minimum id
+    of its component on a random graph (mixed cliques, chains,
+    isolates), as a Python union-find over the same edges does."""
     import random
 
-    from wikihadoop_spark.operators.components import (
-        connected_components,
-        connected_components_star,
-    )
+    from wikihadoop_spark.operators.components import connected_components
 
     rng = random.Random(20260814)
     n = 60
@@ -320,33 +318,24 @@ def test_star_components_equal_min_label_on_random_graphs(spark):
     edges += [(50 + a, 50 + b) for a in range(5) for b in range(a + 1, 5)]
     edges += [(30 + i, 31 + i) for i in range(8)]
     edges = [(a, b) for a, b in edges if a != b]
+
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # the root stays the minimum id
+    want = {i: find(i) for i in range(n)}
+
     e = spark.createDataFrame(edges, ["id_a", "id_b"])
     v = spark.createDataFrame([(i,) for i in range(n)], ["id"])
-    want = {r.id: r.component for r in connected_components(v, e, id_col="id").collect()}
-    got = {
-        r.id: r.component
-        for r in connected_components_star(v, e, id_col="id").collect()
-    }
+    got = {r.id: r.component for r in connected_components(v, e, id_col="id").collect()}
     assert got == want
-
-
-def test_star_components_cross_long_chain_in_log_rounds(spark):
-    """A 64-node chain (diameter 63) must resolve within the star
-    variant's logarithmic round budget — where min-propagation would
-    need 60+ rounds, 10 are enough here."""
-    from wikihadoop_spark.operators.components import connected_components_star
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(63)], ["id_a", "id_b"]
-    )
-    v = spark.createDataFrame([(i,) for i in range(64)], ["id"])
-    got = {
-        r.id: r.component
-        for r in connected_components_star(
-            v, chain, id_col="id", max_iterations=10
-        ).collect()
-    }
-    assert got == {i: 0 for i in range(64)}
 
 
 def test_rowwise_minhash_equals_aggregate_minhash(spark):

@@ -25,11 +25,7 @@ from .mixture import (
 )
 from .packing import pack_token_budget, write_packed_shards
 from .spandedup import duplicated_spans, exact_span_dedup
-from .components import (
-    component_summary,
-    connected_components,
-    connected_components_star,
-)
+from .components import component_summary, connected_components
 
 __all__ = [
     "pair_with_previous",
@@ -43,7 +39,6 @@ __all__ = [
     "capped_block_pairs",
     "simhash_band_pairs",
     "connected_components",
-    "connected_components_star",
     "component_summary",
     "mixture_report",
     "mixture_sample",

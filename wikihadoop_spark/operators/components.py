@@ -16,10 +16,7 @@ Design for 100 TB:
   applies, and the iteration count is the graph DIAMETER, not |V|.
   Near-dup graphs are unions of quasi-cliques (LSH buckets emit all
   in-bucket pairs), so the diameter is small (2-4) — min-propagation
-  converges in a handful of rounds; for adversarial long-chain graphs
-  use :func:`connected_components_star` (Kiveris et al., "Connected
-  Components in MapReduce and Beyond", SoCC'14) — logarithmic rounds
-  in the worst case, equivalence-tested against min-propagation.
+  converges in a handful of rounds.
 - Lineage is truncated every iteration with an eager localCheckpoint —
   without it the plan doubles per round and Catalyst analysis time
   dominates by iteration ~10.
@@ -118,120 +115,8 @@ def connected_components(
     else:
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "
-            "iterations (graph diameter too large — use "
-            "connected_components_star)"
+            "iterations (graph diameter too large)"
         )
-    return (
-        vertices.select(F.col(id_col).alias("node"))
-        .join(labels, "node", "left")
-        .select(
-            F.col("node").alias(id_col),
-            F.coalesce("component", "node").alias("component"),
-        )
-    )
-
-
-def connected_components_star(
-    vertices: DataFrame,
-    edges: DataFrame,
-    *,
-    id_col: str,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iterations: int = 40,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — O(log²·) rounds in the worst case and robust to
-    long-chain graphs where min-label propagation needs diameter
-    rounds.  Same output contract as :func:`connected_components`.
-
-    Each round is two grouped transforms over the edge set:
-    - **large-star**: for every node u, link every neighbor larger
-      than u to the minimum of u's neighborhood (including u) —
-      shrinks tall chains toward local minima without growing edges
-      incident to small nodes;
-    - **small-star**: orient edges toward the smaller endpoint, then
-      for every node u link all (≤ u) neighbors and u itself to the
-      neighborhood minimum — collapses each local star onto its
-      center.
-
-    Fixpoint: the edge set stabilizes as (node → component-min) stars;
-    detected when the round leaves the edge multiset unchanged
-    (checksum comparison — one scalar per round).  Skew note: a
-    mega-component funnels its edges onto the component minimum's
-    groupBy key; ``large_star`` keeps intermediate degree growth
-    bounded (the SoCC'14 result), and the final stars are exactly one
-    edge per non-root member — the same output size as the input
-    vertex set."""
-    def nbhd_min(e: DataFrame) -> DataFrame:
-        # m(u) = min(N(u) + {u})
-        return (
-            e.groupBy("u")
-            .agg(F.min("v").alias("__mv"))
-            .select("u", F.least("__mv", F.col("u")).alias("m"))
-        )
-
-    def large_star(e: DataFrame) -> DataFrame:
-        # over the symmetric closure: every neighbor v > u links to m(u)
-        sym = (
-            e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        return (
-            sym.join(nbhd_min(sym), "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # orient toward the smaller endpoint, collapse each local star
-        # onto its minimum: every node in N(u) + {u} except m links to m
-        o = (
-            e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        withm = o.join(nbhd_min(o), "u")
-        return (
-            withm.select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(withm.select("u", F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def checksum(e: DataFrame):
-        # (count, sum of 32-bit row hashes): overflow-free for any id
-        # range; a match is only a SCREEN — confirmed exactly below
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.hash("u", "v").cast("long")).alias("s"),
-        ).collect()[0]
-        return (row["n"], row["s"])
-
-    cur = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev, prev_sig = cur, checksum(cur)
-    for _ in range(max_iterations):
-        cur = small_star(large_star(cur)).localCheckpoint(eager=True)
-        sig = checksum(cur)
-        if sig == prev_sig and cur.exceptAll(prev).limit(1).count() == 0:
-            break
-        prev, prev_sig = cur, sig
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iterations} rounds"
-        )
-    # fixpoint edges are (member -> component root) stars; roots and
-    # isolated vertices label themselves
-    labels = cur.select(F.col("u").alias("node"), F.col("v").alias("component"))
     return (
         vertices.select(F.col(id_col).alias("node"))
         .join(labels, "node", "left")
