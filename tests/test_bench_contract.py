@@ -9,6 +9,7 @@ import json
 import os
 import subprocess
 import sys
+import types
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -75,25 +76,79 @@ def test_bench_prints_one_json_line(tmp_path):
     assert full["queries"] == d["queries"]
 
 
-def test_contention_judged_from_own_readings():
-    """Contention is derived from the run's own readings: a row whose
-    minimum no second run confirmed (after the extra runs) ships
-    ``contended``, a confirmed one does not; the run is ``contended``
-    when the calibration job's start and end minima differ by more than
-    _STALL_SPREAD_FACTOR (0.5) of the smaller."""
+def test_spot_annotation_rule():
+    """An sf1 spot entry (``_time_row`` behind ``clearCache``) ships
+    ``contended`` exactly when no second run confirmed its minimum
+    after the extra runs: a noisy but confirmed reading stays
+    unannotated, a stall that a later run confirms clears itself."""
     sys.path.insert(0, REPO)
-    from bench import _calibrated, _row
+    import bench
 
-    unconfirmed = _row([1.0, 9.0, 25.0, 64.0, 121.0])
-    assert unconfirmed["contended"] is True
-    assert unconfirmed["sec"] == 1.0 and unconfirmed["spread_sec"] == 120.0
-    confirmed = _row([1.0, 1.05, 1.8])
-    assert "contended" not in confirmed and confirmed["sec"] == 1.0
+    def spot(durations):
+        clock = {"now": 0.0}
+        runs = iter(durations)
+        prewarms = []
+
+        def work():
+            clock["now"] += next(runs)
+
+        orig = bench.time
+        bench.time = types.SimpleNamespace(perf_counter=lambda: clock["now"])
+        try:
+            entry = bench._time_row(work, lambda: prewarms.append(1))
+        finally:
+            bench.time = orig
+        return entry, len(prewarms)
+
+    # clean reading: no annotation, three passes
+    clean, passes = spot([4.0, 4.1, 4.2])
+    assert clean == {"sec": 4.0, "spread_sec": 0.2} and passes == 3
+    # noisy but confirmed (4.0 and 5.5 agree within 0.5x): no flag
+    noisy, passes = spot([4.0, 9.0, 5.5])
+    assert "contended" not in noisy and noisy["spread_sec"] == 5.0
+    assert passes == 3
+    # every run in a distinct stall, nothing confirms: flagged
+    flagged, passes = spot([4.0, 9.0, 16.0, 25.0, 36.0])
+    assert flagged["contended"] is True and flagged["sec"] == 4.0
+    assert passes == 5
+    # a stalled pass that an extra run confirms: the min ships clean
+    cleared, passes = spot([4.0, 9.0, 16.0, 3.9])
+    assert "contended" not in cleared and cleared["sec"] == 3.9
+    assert passes == 4
+
+
+def test_headline_watermark_annotation_rule():
+    """The run-level verdict shipped beside the headline suite: the
+    calibration job's start and end minima, and ``contended`` when they
+    differ by more than _STALL_SPREAD_FACTOR (0.5) of the smaller, in
+    either direction."""
+    sys.path.insert(0, REPO)
+    from bench import _calibrated
 
     quiet = _calibrated(1.0, 1.4)
     assert quiet == {"calibration_sec": [1.0, 1.4], "contended": False}
+    assert _calibrated(1.0, 1.5)["contended"] is False  # exactly 0.5
     assert _calibrated(1.0, 1.6)["contended"] is True
-    assert _calibrated(1.6, 1.0)["contended"] is True  # either direction
+    assert _calibrated(1.6, 1.0)["contended"] is True
+
+
+def test_wikidump_watermark_annotation_rule():
+    """A dump row is ``_row`` over ``_timed_runs``' readings: an
+    unconfirmed minimum after the extra runs ships ``contended`` with
+    the stalled maximum kept in ``spread_sec``; a confirmed one does
+    not."""
+    sys.path.insert(0, REPO)
+    from bench import _row, _timed_runs
+
+    def dump_row(durations):
+        seq = iter(durations)
+        return _row(_timed_runs(lambda: next(seq), lambda: None))
+
+    unconfirmed = dump_row([1.0, 9.0, 25.0, 64.0, 121.0, 999.0])
+    assert unconfirmed["contended"] is True
+    assert unconfirmed["sec"] == 1.0 and unconfirmed["spread_sec"] == 120.0
+    confirmed = dump_row([1.0, 1.05, 1.8])
+    assert confirmed == {"sec": 1.0, "spread_sec": 0.8}
 
 
 def test_stall_rerun_rule():
