@@ -282,8 +282,9 @@ def _calibrated(start: float, end: float) -> dict:
 
 
 # Training-pipeline rows, timed separately so the headline total stays
-# comparable.  dedup_clusters is iterative (its timing includes every
-# convergence round + the localCheckpoint materializations).
+# comparable.  dedup_clusters runs jobs while it builds (the edge
+# checkpoint, then a driver union-find or, over the driver-finish
+# bound, every convergence round), so its timing includes them.
 _PIPELINE_EXTRAS = (
     "dedup_clusters",
     "dedup_verify_pairs",

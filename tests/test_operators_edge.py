@@ -274,32 +274,148 @@ def test_connected_components_handles_chain_and_isolates(spark):
     assert summary[99] == (99, 1, True)
 
 
-def test_connected_components_empty_edges_converges_fast(spark):
-    """Edge-free input exercises the observe-based convergence count's
-    NULL guard (sum over an empty label frame is NULL, which must read
-    as converged, not loop to max_iterations): every vertex labels
-    itself in one round (round-17 internals change)."""
+def _force_rounds(monkeypatch):
+    """Send every graph to the distributed rounds: no edge count is at
+    or under a bound of -1.  Returns the list the rounds' calls land in."""
+    from wikihadoop_spark.operators import components
+
+    calls = []
+    rounds = components._label_rounds
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return rounds(*args, **kwargs)
+
+    monkeypatch.setattr(components, "driver_edge_bound", lambda spark: -1)
+    monkeypatch.setattr(components, "_label_rounds", counted)
+    return calls
+
+
+def test_connected_components_empty_edges_converges_fast(spark, monkeypatch):
+    """Edge-free input on the distributed rounds exercises the
+    observe-based convergence count's NULL guard (sum over an empty
+    label frame is NULL, which must read as converged, not loop to
+    max_iterations): every vertex labels itself in one round."""
     from wikihadoop_spark.operators.components import connected_components
 
+    calls = _force_rounds(monkeypatch)
     edges = spark.createDataFrame([], "id_a long, id_b long")
     vertices = spark.createDataFrame([(v,) for v in (3, 7, 9)], ["id"])
     cc = connected_components(vertices, edges, id_col="id", max_iterations=2)
     assert {r.id: r.component for r in cc.collect()} == {3: 3, 7: 7, 9: 9}
+    assert len(calls) == 1
 
 
-def test_connected_components_raises_past_max_iterations(spark):
+def test_connected_components_raises_past_max_iterations(spark, monkeypatch):
     """A diameter larger than max_iterations must raise, not silently
-    return partial labels."""
+    return partial labels.  Only the distributed rounds iterate (the
+    driver finish of a small chain runs none), so they are forced."""
     import pytest
 
     from wikihadoop_spark.operators.components import connected_components
 
+    _force_rounds(monkeypatch)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 8)], ["id_a", "id_b"]
     )
     vertices = spark.createDataFrame([(v,) for v in range(1, 9)], ["id"])
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(vertices, chain, id_col="id", max_iterations=2)
+
+
+def _union_find_labels(n: int, edges) -> dict:
+    """The minimum id of each vertex's component, by a plain union-find."""
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # the root stays the minimum id
+    return {i: find(i) for i in range(n)}
+
+
+@pytest.mark.parametrize("branch", ["driver", "rounds"])
+def test_connected_components_branches_equal_union_find(spark, monkeypatch, branch):
+    """Both finishes must label every vertex with the minimum id of its
+    component on random graphs mixing cliques, chains, isolated nodes,
+    duplicate and reversed edges and self-loops, and on an empty edge
+    list."""
+    import random
+
+    from wikihadoop_spark.operators import components
+
+    calls = _force_rounds(monkeypatch) if branch == "rounds" else []
+    rng = random.Random(20261019)
+    n = 80
+    for n_random in (0, 25, 70):
+        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(n_random)]
+        if n_random:
+            base = rng.randrange(n - 6)
+            edges += [(base + a, base + b) for a in range(5) for b in range(a + 1, 5)]
+            edges += [(i + 1, i) for i in range(10, 18)]  # reversed chain
+            edges += edges[:5] + [(b, a) for a, b in edges[5:10]]  # dups
+            edges += [(i, i) for i in range(60, 64)]  # self-loops
+        e = spark.createDataFrame(edges, "id_a long, id_b long")
+        v = spark.range(n).withColumnRenamed("id", "doc")
+        got = {
+            r.doc: r.component
+            for r in components.connected_components(v, e, id_col="doc").collect()
+        }
+        assert got == _union_find_labels(n, edges), (branch, n_random)
+    assert len(calls) == (3 if branch == "rounds" else 0)
+
+
+@pytest.mark.parametrize("branch", ["driver", "rounds"])
+def test_connected_components_keeps_int_id_type(spark, monkeypatch, branch):
+    """An ``int`` id column keeps its type through either finish."""
+    from pyspark.sql.types import IntegerType
+
+    from wikihadoop_spark.operators.components import connected_components
+
+    if branch == "rounds":
+        _force_rounds(monkeypatch)
+    edges = spark.createDataFrame([(5, 4), (4, 3), (8, 9)], "id_a int, id_b int")
+    vertices = spark.createDataFrame([(v,) for v in (3, 4, 5, 7, 8, 9)], "id int")
+    cc = connected_components(vertices, edges, id_col="id")
+    assert [f.dataType for f in cc.schema.fields] == [IntegerType(), IntegerType()]
+    got = {r.id: r.component for r in cc.collect()}
+    assert got == {3: 3, 4: 3, 5: 3, 7: 7, 8: 8, 9: 8}
+
+
+def test_connected_components_small_graph_labels_are_local_relation(spark):
+    """The driver finish hands its labels back as a LocalRelation that
+    broadcasts into the join back, never as a Python-list RDD scan."""
+    from wikihadoop_spark.operators.components import connected_components
+
+    edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id_a long, id_b long")
+    cc = connected_components(spark.range(10), edges, id_col="id")
+    plan = cc._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "BroadcastHashJoin" in plan, plan
+    assert "Scan ExistingRDD" not in plan, plan
+
+
+def test_driver_edge_bound_follows_broadcast_threshold(spark):
+    """The driver-finish bound is derived from the session's confs: two
+    24-byte label rows per edge under the smaller of the broadcast
+    threshold and maxResultSize, and none when broadcast is off."""
+    from wikihadoop_spark.operators.components import driver_edge_bound
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "10485760")
+        assert driver_edge_bound(spark) == 10485760 // 48
+        spark.conf.set(key, "96")
+        assert driver_edge_bound(spark) == 2
+        spark.conf.set(key, "-1")
+        assert driver_edge_bound(spark) == 0
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_star_components_equal_min_label_on_random_graphs(spark):
@@ -318,19 +434,7 @@ def test_star_components_equal_min_label_on_random_graphs(spark):
     edges += [(50 + a, 50 + b) for a in range(5) for b in range(a + 1, 5)]
     edges += [(30 + i, 31 + i) for i in range(8)]
     edges = [(a, b) for a, b in edges if a != b]
-
-    parent = list(range(n))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        parent[max(ra, rb)] = min(ra, rb)  # the root stays the minimum id
-    want = {i: find(i) for i in range(n)}
+    want = _union_find_labels(n, edges)
 
     e = spark.createDataFrame(edges, ["id_a", "id_b"])
     v = spark.createDataFrame([(i,) for i in range(n)], ["id"])

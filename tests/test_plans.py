@@ -876,3 +876,36 @@ def test_events_funnel_skewsafe_aggregates_not_window(spark):
             single_ex.append(line)
     assert len(hash_ex) == 3, hash_ex  # one per step's per-user agg
     assert len(single_ex) == 1, single_ex
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["sample_mixture", "mixture_waterfill", "pack_token_budget", "decontaminate_bloom"],
+)
+def test_driver_built_frames_are_local_relations(spark, name):
+    """Threshold, offset and Bloom frames built on the driver enter the
+    plan as a LocalRelation (LocalTableScan), not as a Python-list RDD
+    scanned by a Python task."""
+    plan = plan_of(spark, name)
+    assert "LocalTableScan" in plan, plan
+    assert "Scan ExistingRDD" not in plan, plan
+
+
+def test_segment_bloom_frames_are_local_relations(spark):
+    """The one-row Bloom frame of both stateless strips is a
+    LocalRelation of ``array<bigint>``, as the DDL-typed frame was."""
+    from wikihadoop_spark.catalog import load_table
+    from wikihadoop_spark.operators.decontam import bloom_frame
+    from wikihadoop_spark.operators.segdedup import SegmentBloom, strip_frequent_segments
+    from wikihadoop_spark.operators.spandedup import strip_duplicated_spans
+
+    assert (
+        bloom_frame(spark, (1, -2)).schema
+        == spark.createDataFrame([([1, -2],)], "__bloom array<bigint>").schema
+    )
+    docs = load_table(spark, SF, "documents").select("doc_id", "text")
+    bloom = SegmentBloom(words=(5, 9, 3), n_bits=189, n_hashes=2, n_items=2)
+    for df in (strip_frequent_segments(docs, bloom), strip_duplicated_spans(docs, bloom, k=5)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, plan
+        assert "Scan ExistingRDD" not in plan, plan

@@ -48,10 +48,12 @@ from __future__ import annotations
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from .dedup import hash64, shingles
+from .local import local_frame
 
 #: bits per word — 63 keeps every mask and OR inside non-negative int64
 WORD_BITS = 63
@@ -148,6 +150,15 @@ def might_contain(s: Column, bloom_col: Column, bloom: NgramBloom) -> Column:
     return reduce(lambda a, b: a & b, tests)
 
 
+_BLOOM_SCHEMA = StructType([StructField("__bloom", ArrayType(LongType()))])
+
+
+def bloom_frame(spark: SparkSession, words) -> DataFrame:
+    """The one-row ``__bloom array<bigint>`` frame that carries a Bloom
+    filter's words into a broadcast cross join, as a LocalRelation."""
+    return local_frame(spark, [[list(words)]], _BLOOM_SCHEMA)
+
+
 def decontaminate_ngram_bloom(
     corpus: DataFrame,
     bloom: NgramBloom,
@@ -163,9 +174,7 @@ def decontaminate_ngram_bloom(
     shingle test folds row-locally via ``F.exists`` inside the scan
     projection — zero corpus shuffles, same shape as the exact-array
     ``decontaminate_ngram``."""
-    bf = corpus.sparkSession.createDataFrame(
-        [(list(bloom.words),)], "__bloom array<bigint>"
-    )
+    bf = bloom_frame(corpus.sparkSession, bloom.words)
     contaminated = F.exists(
         shingles(F.col(text_col), bloom.shingle_k),
         lambda s: might_contain(s, F.col("__bloom"), bloom),

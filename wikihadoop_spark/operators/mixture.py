@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import hash64
+from .local import local_frame
 
 #: bucket resolution: rates are quantized to 1/SCALE
 SCALE = 1_000_000
@@ -116,14 +117,9 @@ def mixture_sample(
             StructField("keep_threshold", LongType(), False),
         ]
     )
-    thr_df = df.sparkSession.createDataFrame(
-        [
-            (g, t)
-            for g, t in sorted(
-                thr.items(), key=lambda kv: (kv[0] is None, str(kv[0] or ""))
-            )
-        ],
-        thr_schema,
+    ordered = sorted(thr.items(), key=lambda kv: (kv[0] is None, str(kv[0] or "")))
+    thr_df = local_frame(
+        df.sparkSession, [[g for g, _ in ordered], [t for _, t in ordered]], thr_schema
     )
     bucket = (
         hash64(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string"))) % SCALE

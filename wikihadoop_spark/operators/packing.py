@@ -44,6 +44,9 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+from .local import local_frame
 
 # Bucket-count ceiling.  More buckets only add parallelism to the
 # per-bucket window stage (correctness is bucket-independent, pinned by
@@ -156,12 +159,15 @@ def pack_token_budget(
     for row in sorted(totals, key=lambda r: r["__pid"]):
         offsets[row["__pid"]] = acc
         acc += row["__tot"]
-    # explicit schema: createDataFrame([]) cannot infer types, and an
-    # empty input (e.g. a corpus date-partition with no documents) must
-    # yield an empty result, not a ValueError
-    offset_df = arranged.sparkSession.createDataFrame(
-        [(int(pid), int(off)) for pid, off in offsets.items()],
-        "__pid int, __off bigint",
+    # explicit schema: an empty input (e.g. a corpus date-partition
+    # with no documents) has no rows to infer types from and must yield
+    # an empty result, not a ValueError
+    offset_df = local_frame(
+        arranged.sparkSession,
+        [[int(pid) for pid in offsets], [int(off) for off in offsets.values()]],
+        StructType(
+            [StructField("__pid", IntegerType()), StructField("__off", LongType())]
+        ),
     )
     w = (
         Window.partitionBy("__pid")

@@ -315,11 +315,9 @@ def strip_frequent_segments(
     out_cols = [c for c in docs.columns if c != text_col]
 
     if isinstance(index, SegmentBloom):
-        from .decontam import might_contain
+        from .decontam import bloom_frame, might_contain
 
-        bf = docs.sparkSession.createDataFrame(
-            [(list(index.words),)], "__bloom array<bigint>"
-        )
+        bf = bloom_frame(docs.sparkSession, index.words)
         docs = docs.crossJoin(F.broadcast(bf))
         kept = F.filter(
             segs, lambda s: ~might_contain(s, F.col("__bloom"), index)

@@ -336,11 +336,9 @@ def strip_duplicated_spans(
     out_cols = [c for c in docs.columns if c != text_col]
 
     if isinstance(index, SegmentBloom):
-        from .decontam import might_contain
+        from .decontam import bloom_frame, might_contain
 
-        bf = docs.sparkSession.createDataFrame(
-            [(list(index.words),)], "__bloom array<bigint>"
-        )
+        bf = bloom_frame(docs.sparkSession, index.words)
         docs = docs.crossJoin(F.broadcast(bf))
         starts = F.filter(
             pos, lambda p: might_contain(window_at(p), F.col("__bloom"), index)
