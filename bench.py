@@ -24,6 +24,12 @@ listed in ``queries_contended``).  A fixed calibration job is timed at
 the start and at the end of the run; both minima ship as
 ``calibration_sec``, and the run is ``contended`` when they differ by
 more than _STALL_SPREAD_FACTOR of the smaller.
+
+Every row also records ``codegen_compiles``: the classes Spark's code
+generator compiled over its timed runs (``observability.codegen_compiles``).
+A row whose warmed runs still compile is paying Janino and the JIT
+again, not measuring steady state.  The printed line carries the sum
+over the headline rows; BENCH_SELF.json has them per query.
 """
 
 from __future__ import annotations
@@ -39,6 +45,7 @@ REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
+from wikihadoop_spark.observability import codegen_compiles
 from wikihadoop_spark.relational import QUERIES
 from wikihadoop_spark.session import get_spark
 
@@ -97,7 +104,7 @@ def main() -> None:
             _fault_in(p)
 
     rows = {
-        name: _time_row(lambda: _full(QUERIES[name](spark, sf_dir)), prewarm)
+        name: _time_row(lambda: _full(QUERIES[name](spark, sf_dir)), prewarm, spark)
         for name in HEADLINE
     }
     timings = {name: row["sec"] for name, row in rows.items()}
@@ -109,6 +116,7 @@ def main() -> None:
     calibration.append(_calibration(spark))
     verdict = _calibrated(*calibration)
     contended = [name for name, row in rows.items() if row.get("contended")]
+    compiles = {name: row["codegen_compiles"] for name, row in rows.items()}
 
     total = round(sum(timings.values()), 3)
     # the shuffle-bound sf1 spot minima also print as ``sf1_<name>``
@@ -130,6 +138,7 @@ def main() -> None:
         "queries_contended": contended,
         "queries": timings,
         "queries_spread": {name: row["spread_sec"] for name, row in rows.items()},
+        "queries_codegen_compiles": compiles,
         "wikidump": wikidump,
     }
     if sf1_spot is not None:
@@ -160,6 +169,8 @@ def main() -> None:
         "wikidump": wikidump,
         "value": total,
         "sf": sf,
+        # classes Spark compiled over the headline rows' timed runs
+        "codegen_compiles": None if None in compiles.values() else sum(compiles.values()),
         "queries_contended": contended,
         "queries": timings,
     }
@@ -242,15 +253,30 @@ def _row(dts: list[float]) -> dict:
     return row
 
 
-def _time_row(work, prewarm) -> dict:
-    """The shipped row for ``work`` timed through ``_timed_runs``."""
+def _measured_row(run, prewarm, spark=None) -> tuple[dict, list[float]]:
+    """``run`` timed through ``_timed_runs``: the shipped row and the
+    times themselves.  Given ``spark``, the row also carries the classes
+    Spark compiled over the timed runs as ``codegen_compiles`` (None
+    where Spark has no reading)."""
+    before = spark and codegen_compiles(spark)
+    dts = _timed_runs(run, prewarm)
+    row = _row(dts)
+    if spark is not None:
+        after = codegen_compiles(spark)
+        row["codegen_compiles"] = after[0] - before[0] if before and after else None
+    return row, dts
+
+
+def _time_row(work, prewarm, spark=None) -> dict:
+    """The shipped row for ``work`` timed through ``_timed_runs``, with
+    ``codegen_compiles`` when given ``spark``."""
 
     def run() -> float:
         t0 = time.perf_counter()
         work()
         return time.perf_counter() - t0
 
-    return _row(_timed_runs(run, prewarm))
+    return _measured_row(run, prewarm, spark)[0]
 
 
 # The calibration job: one fixed-size CPU-bound aggregate, the same
@@ -391,7 +417,7 @@ def _bench_pipeline_extras(spark, sf_dir: str) -> dict | None:
         # cache before every timed run makes each one compute from the
         # parquet inputs
         extras[name] = _time_row(
-            lambda: _run_row(spark, name, sf_dir), spark.catalog.clearCache
+            lambda: _run_row(spark, name, sf_dir), spark.catalog.clearCache, spark
         )
     return extras
 
@@ -659,7 +685,7 @@ def _bench_sf1_spot(spark, sf_dir: str, sf01_timings: dict) -> dict | None:
         _run_row(spark, name, data_dir)  # warm plan + codegen
         # a fresh cache before every timed run, as in the extras loop
         entry = _time_row(
-            lambda: _run_row(spark, name, data_dir), spark.catalog.clearCache
+            lambda: _run_row(spark, name, data_dir), spark.catalog.clearCache, spark
         )
         entry["x_vs_sf0.1"] = round(entry["sec"] / sf01_timings[name], 2)
         return entry
@@ -806,8 +832,7 @@ def _time_dump(
 
     _fault_in(path)
     run()  # warm python workers + codegen for this pipeline shape
-    dts = _timed_runs(run, lambda: _fault_in(path))
-    row = _row(dts)
+    row, dts = _measured_row(run, lambda: _fault_in(path), spark)
     row[rate_key] = round(raw_gb / (min(dts) / 3600) / cpus, 2)
     row["path"] = sink["path"]
     return row

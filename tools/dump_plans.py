@@ -3,17 +3,54 @@ catalog queries, each annotated with the scale property it must keep
 (the same properties tests/test_plans.py pins).
 
   python tools/dump_plans.py   # rewrites PLANS.md at the repo root
+
+Spark numbers expression ids (``l_orderkey#12L``), exchange plan ids
+(``[plan_id=104]``) and lambda variables (``lambda x_45``) from
+JVM-wide counters, and prints array literals by identity hash
+(``UnsafeArrayData@7a50b5f7``), so the same plan prints different
+numbers whenever anything else ran first.  Each section renumbers each
+kind from 0 in order of first appearance; an unchanged plan then prints
+the same bytes and a rerun leaves PLANS.md unchanged.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF = "/root/testdata/sf0.001"
+
+# each pattern ends with the ``id`` group it renumbers; an expression
+# id follows its attribute's name (``n_name#30``, ``count(1)#7L``), a
+# ``#`` inside a literal does not
+_IDS = tuple(
+    re.compile(p)
+    for p in (
+        r"(?<=[\w)`])#(?P<id>\d+)",
+        r"plan_id=(?P<id>\d+)",
+        r"lambda [a-z]_(?P<id>\d+)",
+        r"\b[A-Z][\w$]*@(?P<id>[0-9a-f]+)\b",
+    )
+)
+
+
+def renumber(plan: str) -> str:
+    """``plan`` with each kind of id in ``_IDS`` numbered from 0 in
+    order of first appearance."""
+    for pattern in _IDS:
+        ids: dict[str, int] = {}
+
+        def sub(m: re.Match) -> str:
+            head = m.group(0)[: m.start("id") - m.start()]
+            return head + str(ids.setdefault(m["id"], len(ids)))
+
+        plan = pattern.sub(sub, plan)
+    return plan
+
 
 # (query, what the plan must show)
 SHOWCASE = [
@@ -301,6 +338,9 @@ def main() -> None:
 
     spark = get_spark("plan-dump", cpus=8, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
+    # untruncated scan metadata: a cut at a fixed length moves with the
+    # digits of the ids before it and drops ids from the numbering order
+    spark.conf.set("spark.sql.maxMetadataStringLength", str(1 << 20))
 
     parts = [
         "# PLANS — physical-plan audit of representative queries\n",
@@ -311,7 +351,7 @@ def main() -> None:
     ]
     for name, why in SHOWCASE:
         df = QUERIES[name](spark, SF)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = renumber(df._jdf.queryExecution().executedPlan().toString())
         parts.append(f"## `{name}`\n\n{why}\n\n```\n{plan.strip()}\n```\n")
     out = os.path.join(REPO, "PLANS.md")
     with open(out, "w") as fh:

@@ -144,3 +144,31 @@ class TruncationCounter:
         total = int(next(iter(self._total.get.values())))
         kept = int(next(iter(self._kept.get.values())))
         return {self._name or "dropped_members": total - kept}
+
+
+def codegen_compiles(spark) -> tuple[int, float] | None:
+    """``(classes compiled, milliseconds compiling)`` by Spark's code
+    generator in this JVM since it started, or None on a Spark without
+    these hooks.
+
+    The count is ``CodegenMetrics``' compile-time histogram, which
+    Janino's ``doCompile`` updates once per compiled class; a class
+    served from the generated-class cache does not count.  The
+    milliseconds are the same ``doCompile``'s nanosecond accumulator
+    (``CodeGenerator.compileTime``); the histogram keeps samples, not a
+    sum.  Both are JVM-wide, so under a local master they cover the
+    driver and every executor task; read them before and after a run and
+    take the difference.  ``CodeGenerator`` is not touched before the
+    first compile: its first load fixes the cache size for the JVM."""
+    try:
+        jvm = spark.sparkContext._jvm
+        count = int(
+            jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount()
+        )
+        if count == 0:
+            return 0, 0.0
+        nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+        return count, nanos / 1e6
+    except Exception:  # noqa: BLE001 — a Spark without the hooks: no reading
+        return None

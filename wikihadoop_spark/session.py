@@ -13,6 +13,16 @@ Inside a PySpark Python worker, importing the package installs
 directory only when the archive changed.  It is a no-op on the driver
 (``SparkFiles._is_running_on_worker`` unset), where ``zipimporter``
 already invalidates lazily (``_get_files``), and on a second install.
+
+Sessions made by ``get_spark`` size Spark's generated-class cache to
+the catalog's working set (``CODEGEN_CACHE_MAX_ENTRIES``).  That conf
+is static: each JVM reads it once, when Spark's code generator is
+first loaded, so ``configure_session`` cannot set it on a session it
+did not build.  Vanilla sessions (an embedding driver's,
+``tools/driver_sim.py``, ``tools/gate_rehearsal.py``) keep Spark's
+default of 100 entries by design: their results and plans are the
+same, and they only compile classes again once a pass needs more than
+100 of them.
 """
 
 from __future__ import annotations
@@ -20,6 +30,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Entries in Spark's generated-class cache
+# (``spark.sql.codegen.cache.maxEntries``, default 100).  A first pass
+# over the whole catalog generates about 1,160 distinct classes
+# (1,158-1,160 at sf0.001), and the eight queries of perfbench's
+# catalog workload about 120.  At 100 entries every warm pass over
+# those eight evicts and re-compiles 113-118 classes with Janino, and
+# the JVM then JIT-compiles them again.  4096 holds the whole catalog
+# with about 3.5x headroom.
+CODEGEN_CACHE_MAX_ENTRIES = 4096
 
 
 def default_cpus() -> int:
@@ -235,6 +255,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
