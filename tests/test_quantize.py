@@ -1763,9 +1763,8 @@ def test_reaped_index_read_fails_loudly(spark, tmp_path):
 
 def test_int8_cosine_tracks_float_reference(spark):
     """The PRECISION-REFERENCE pin the float-twin retirement plan
-    requires (rotation comment, relational.py: embedding_cosine_dedup
-    may retire from the catalog only after an equivalent float-vs-int8
-    agreement pin lives here).  On the fixed sf0.001 fixture:
+    requires (embedding_cosine_dedup may retire from the catalog only
+    after an equivalent float-vs-int8 agreement pin lives here).  On the fixed sf0.001 fixture:
 
     (a) the exact-int8 quantized cosine tracks the TRUE float cosine
         within 0.02 for every emitted dedup pair AND for 2000 seeded

@@ -10,6 +10,12 @@ registered queries — exactly the driver's gate membership — against
 their DuckDB oracles with the order-insensitive sorted-column multiset
 compare from ``tests/parity_util.py``.
 
+The order is derived when ``relational`` is imported
+(``relational.gate_order``): queries with no green row in any
+``CORRECTNESS_r*.json`` or no source pin in ``GATE_PINS.json`` come
+first, then the rest by ascending last-green round; ties keep
+registration order.
+
   python tools/gate_rehearsal.py [sf_dir]        # default sf0.01 (gate SF)
   python tools/gate_rehearsal.py [sf_dir] --all  # the whole catalog, not
                                                  # just the gate window —
